@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run chosen queries N times each in one JVM and report
   * wall seconds plus scheduler counters (jobs / stages / tasks and
   * summed task time) per run, so overhead-dominated queries (many
   * tiny stages) can be told apart from compute-bound ones. Same
-  * session config as Bench; noop sink; not part of the driver
-  * contract.
+  * session as Bench ([[GraftSession]]); noop sink; a dev tool, not
+  * part of the Bench/Verify contract. Counters are exact: each rep
+  * drains the listener bus before it prints.
   *
   * Usage: runMain graft.Profile <sfDir> <reps> <query>...
   */
@@ -17,16 +17,7 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog", "graft.sources.TxnLogCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -71,8 +62,9 @@ object Profile {
           case e: Throwable => println(s"PROF $n rep$rep FAILED: $e")
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        // brief settle so straggling listener events land in this rep
-        Thread.sleep(150)
+        // drain the listener bus so every event of this rep (and none
+        // of the next) lands in its counters
+        org.apache.spark.sql.graftshim.Shim.awaitListeners(spark)
         println(f"PROF $n%-32s rep$rep wall=$wall%7.3f jobs=$jobs%3d " +
           f"stages=$stages%4d tasks=$tasks%5d taskSec=${taskMs / 1e3}%8.2f")
         if (stageDetail) {

@@ -61,6 +61,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * latest+1, re-merge on loss) so two concurrent column additions
   * can never overwrite each other's registration.
   *
+  * Rewrite pipeline: every DML, replace and compaction op — delete,
+  * update and their deletion-vector forms, merge, mergeIntoKeys, the
+  * five replaces, the compactions — describes its commit as one
+  * `Rewrite` (snapshot and victim files; frames to stage, each
+  * optionally constraint-checked and referenced as `cdc insert`; the
+  * old-image change file or a replace's zero-copy victim refs; dv and
+  * header lines; the commit policy) and hands it to `runRewrite`, the
+  * one executor. It owns the rules the ops share: staging directories
+  * reserved and sealed, the writes overlapped, constraints enforced
+  * on staged new rows, the change feed assembled (none for a pure
+  * insert wave, whose adds auto-count), the deletion-vector protocol
+  * floor stamped, and the single [[commit]]. The ops keep only their
+  * own decisions: which files are victims and why, MERGE clause
+  * routing, and light/heavy deletion-vector routing.
+  *
   * 100 TB posture: the log is metadata-scale (file lists, not data);
   * a snapshot read plans from the live-file manifest — no directory
   * listing of the data tree, no eventual-consistency exposure — and
@@ -833,6 +848,20 @@ object TxnLog {
       col(physicalName(f)).as(f.name)).toIndexedSeq: _*)
   }
 
+  /** Rename a physically-named frame's columns back to LOGICAL names
+    * under a mapping, keeping column order (staged read-backs); no-op
+    * without a mapping. */
+  private def toLogicalNames(df: DataFrame,
+                             schema: Option[StructType]): DataFrame =
+    schema match {
+      case Some(sc) if hasMapping(sc) =>
+        import org.apache.spark.sql.functions.col
+        val m = sc.fields.map(f => physicalName(f) -> f.name).toMap
+        df.select(df.columns.toIndexedSeq.map(c =>
+          col(c).as(m.getOrElse(c, c))): _*)
+      case _ => df
+    }
+
   /** PHYSICAL names tombstoned by DROP COLUMN — replay-accumulated
     * (read only on schema-registering commits, which are rare). */
   private def droppedPhysicals(t: Table): Set[String] =
@@ -968,7 +997,7 @@ object TxnLog {
   }
 
   /** Append a sequence of INDEPENDENT slices as consecutive commits:
-    * every slice STAGES concurrently (stagedPar, guide §2.6 — the
+    * every slice STAGES concurrently ([[stagedPar]] — the
     * writes are independent small jobs whose wall time is stage
     * latency, and a strictly sequential loop leaves the executors
     * idle between them), then COMMITS strictly in input order, so the
@@ -982,12 +1011,20 @@ object TxnLog {
     * commits. Constraints (if any) are enforced per slice against its
     * own staged files, refusing BEFORE that slice's commit exactly
     * like [[append]]; `statsCols` stamp per-file (min, max) exactly
-    * like [[appendWithStats]]. The wave stages against the wave-entry
-    * registered schema; a concurrent schema-changing commit conflicts
-    * through commitRegistering's re-merge, as with any append race. */
+    * like [[appendWithStats]]. The slices must have IDENTICAL schemas
+    * (refused otherwise): the wave stages every slice against the
+    * wave-entry registered schema, so a slice evolving the schema
+    * mid-wave would stage files the sequential loop would not have
+    * written, and the same-per-commit-file-sets equivalence is what
+    * src_txnlog_history's oracle pins. A concurrent schema-changing
+    * commit conflicts through commitRegistering's re-merge, as with
+    * any append race. */
   def appendSlices(s: SparkSession, t: Table, slices: Seq[DataFrame],
                    statsCols: Seq[String] = Nil): Seq[Long] = {
     if (slices.isEmpty) return Nil
+    require(slices.forall(_.schema == slices.head.schema),
+      "appendSlices needs slices with identical schemas; got " +
+        slices.map(_.schema.simpleString).distinct.mkString(" vs "))
     require(declaredPartCols(t).isEmpty,
       "appendSlices stages flat; a table declared PARTITIONED BY " +
         "routes through appendPartitioned per slice")
@@ -1002,9 +1039,9 @@ object TxnLog {
       })
       slices.indices.map { i =>
         val enforcedAt = latestVersion(t)
-        enforceStaged(s, t, Seq(stages(i)), constraintsOf(t))
+        enforceStaged(s, t, stages(i), constraintsOf(t))
         commitRegistering(t, slices(i).schema, lineSets(i),
-          () => enforceStaged(s, t, Seq(stages(i)), constraintsOf(t)),
+          () => enforceStaged(s, t, stages(i), constraintsOf(t)),
           enforcedAt)
       }
     } finally seal(t, stages: _*)
@@ -1024,10 +1061,10 @@ object TxnLog {
       // the first iteration — a constraint landing mid-staging can
       // never be skipped by a first-attempt win
       val enforcedAt = latestVersion(t)
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
+      enforceStaged(s, t, stage, constraintsOf(t))
       commitRegistering(t, df.schema,
         addLinesFor(s, t, stage, statsCols) ++ extraLines,
-        () => enforceStaged(s, t, Seq(stage), constraintsOf(t)),
+        () => enforceStaged(s, t, stage, constraintsOf(t)),
         enforcedAt, allowWiden)
     } finally seal(t, stage)
   }
@@ -1062,12 +1099,11 @@ object TxnLog {
       }
       val (schema, changed, widened) =
         mergedSchema(t, registeredSchema(t), incoming, allowWiden)
-      val schemaLine = changed || base < 0
       // a write-side widening promotes old files' scan types exactly
-      // like the explicit ALTER — same protocol floor, same commit
-      val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
-        (if (schemaLine)
-          Seq(s"schema\t${schema.json}") else Nil) ++ lines0
+      // like the explicit ALTER — same protocol floor, same commit;
+      // the first commit always registers
+      val lines =
+        schemaHeader((schema, changed || base < 0, widened)) ++ lines0
       if (tryPublish(t, base + 1, lines)) committed = base + 1
     }
     committed
@@ -1117,10 +1153,10 @@ object TxnLog {
       toPhysical(df, registeredSchema(t))
         .write.partitionBy(partCols: _*).parquet(stage.toString)
       val enforcedAt = latestVersion(t) // see appendLines
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
+      enforceStaged(s, t, stage, constraintsOf(t))
       commitRegistering(t, df.schema,
         partitionedAddLines(s, t, stage, statsCols) ++ extraLines,
-        () => enforceStaged(s, t, Seq(stage), constraintsOf(t)),
+        () => enforceStaged(s, t, stage, constraintsOf(t)),
         enforcedAt, allowWiden)
     } finally seal(t, stage)
   }
@@ -1201,10 +1237,7 @@ object TxnLog {
   def dropPartition(t: Table, spec: Map[String, String]): Long = {
     require(spec.nonEmpty, "dropPartition needs a partition spec")
     val snap = snapshot(t)
-    val victims = snap.liveFiles.filter { rel =>
-      val p = snap.filePartitions.getOrElse(rel, Map.empty)
-      spec.forall { case (c, v) => p.get(c).contains(v) }
-    }
+    val victims = filesIn(snap, spec)
     if (victims.isEmpty) return snap.version
     commit(t, snap.version, adds = Nil, removes = victims,
       extra = victims.map(r => s"cdc\t$r\tdelete"))
@@ -1468,20 +1501,20 @@ object TxnLog {
       // — a first-attempt interloper included — re-enforces, so a
       // constraint landing mid-staging is never blind-walked past
       var cleanAt = latestVersion(t)
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
+      enforceStaged(s, t, stage, constraintsOf(t))
       val marker = s"txn\t$appId\t$batchId"
       while (true) {
         val base = latestVersion(t)
         if (lastBatch(t, appId).exists(_ >= batchId)) return false
         if (base != cleanAt) {
-          enforceStaged(s, t, Seq(stage), constraintsOf(t))
+          enforceStaged(s, t, stage, constraintsOf(t))
           cleanAt = base
         }
         val (schema, changed, widened) =
           mergedSchema(t, registeredSchema(t), df.schema, allowWiden)
-        val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
-          (if (changed || base < 0)
-            Seq(s"schema\t${schema.json}") else Nil) ++ adds :+ marker
+        val lines =
+          schemaHeader((schema, changed || base < 0, widened)) ++ adds :+
+            marker
         if (tryPublish(t, base + 1, lines)) return true
       }
       throw new IllegalStateException("unreachable")
@@ -1770,30 +1803,21 @@ object TxnLog {
     * retries — steady ingest cannot starve OPTIMIZE), while any
     * concurrent commit that rewrote one of the compacted files still
     * fails rather than resurrecting its rows. */
-  def compact(s: SparkSession, t: Table, targetFiles: Int = 1): Long = {
-    val snap = snapshot(t)
-    val partCols = snap.partCols
-    val statsCols = liveStatsCols(snap).filterNot(partCols.contains)
-    val stage = newStage(t, t.dataDir)
-    try {
-      val df = toPhysical(
-        readRels(s, t, snap, snap.liveFiles).coalesce(targetFiles),
-        snap.schemaJson.map(parseSchema))
-      // a partitioned table compacts THROUGH its layout (tokens
-      // re-emitted) — OPTIMIZE must never silently flatten the
-      // metadata dropPartition and partition pruning depend on
-      val adds =
-        if (partCols.isEmpty) {
-          df.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, statsCols)
-        } else {
-          df.write.partitionBy(partCols: _*).parquet(stage.toString)
-          partitionedAddLines(s, t, stage, statsCols)
-        }
-      commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
-        extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
-    } finally seal(t, stage)
-  }
+  def compact(s: SparkSession, t: Table, targetFiles: Int = 1): Long =
+    compactLive(s, t, snapshot(t), Nil)(_.coalesce(targetFiles))
+
+  /** The whole-live-set rewrite [[compact]] and [[compactZorderKeys]]
+    * share: every live file restages through `cluster`, the row
+    * transform, stamping stats for the manifest-tracked columns plus
+    * `keys`, in one dataChange=false commit with the file-disjoint
+    * reconciliation. A partitioned table compacts THROUGH its layout
+    * (tokens re-emitted): OPTIMIZE must never silently flatten the
+    * metadata dropPartition and partition pruning depend on. */
+  private def compactLive(s: SparkSession, t: Table, snap: Snapshot,
+      keys: Seq[String])(cluster: DataFrame => DataFrame): Long =
+    runRewrite(s, t, Rewrite(snap, removes = snap.liveFiles,
+      frames = Seq(Frame(cluster(readRels(s, t, snap, snap.liveFiles)))),
+      stats = keys, rowsUnchanged = true, reconcile = true))
 
   /** Incremental OPTIMIZE — the steady-state maintenance shape: only
     * live files SMALLER than `minFileBytes` compact; right-sized
@@ -1812,80 +1836,65 @@ object TxnLog {
   def compactSmall(s: SparkSession, t: Table, minFileBytes: Long,
                    targetFiles: Int = 1): Long = {
     val snap = snapshot(t)
-    val bySpec = snap.liveFiles
-      .filter { rel =>
-        // a DV-carrying file is always a victim regardless of size:
-        // incremental maintenance is where deletion vectors get
-        // materialized away (the full-table OPTIMIZE being the other)
-        snap.dvs.contains(rel) || (snap.fileSizes.get(rel) match {
-          case Some(n) => n < minFileBytes // manifest-recorded: no stat
-          case None => // legacy add without a size token: one stat
-            val p = t.root.resolve(rel)
-            Files.exists(p) && Files.size(p) < minFileBytes
-        })
-      }
-      .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty))
-      // a lone small file gains nothing — unless it carries a DV,
-      // which the rewrite purges
-      .filter(g => g._2.length >= 2 || g._2.exists(snap.dvs.contains))
-    if (bySpec.isEmpty) return snap.version
-    compactGroups(s, t, snap, bySpec, targetFiles)
+    val small = snap.liveFiles.filter { rel =>
+      // a DV-carrying file is always a victim regardless of size:
+      // incremental maintenance is where deletion vectors get
+      // materialized away (the full-table OPTIMIZE being the other)
+      snap.dvs.contains(rel) || (snap.fileSizes.get(rel) match {
+        case Some(n) => n < minFileBytes // manifest-recorded: no stat
+        case None => // legacy add without a size token: one stat
+          val p = t.root.resolve(rel)
+          Files.exists(p) && Files.size(p) < minFileBytes
+      })
+    }
+    // a lone small file gains nothing — unless it carries a DV, which
+    // the rewrite purges
+    compactGroups(s, t, snap, small, targetFiles)(
+      g => g.length >= 2 || g.exists(snap.dvs.contains))
   }
 
   /** The shared group-rewrite body of [[compactSmall]] and
-    * [[compactPartition]]: each (partition spec -> files) group
-    * rewrites into `targetFiles` compacted files WITHIN its layout
+    * [[compactPartition]]: `files` group by recorded partition spec,
+    * and each group `worth` rewriting (the rest stay) rewrites into
+    * `targetFiles` compacted files WITHIN its layout
     * (partitioned victims read with the data schema — physical names
     * under a mapping, aliased back — and re-emit their tokens; flat
     * groups read through the registered schema), all published in
     * ONE atomic dataChange=false commit with the file-disjoint
     * reconciliation, so concurrent appends commute. */
   private def compactGroups(s: SparkSession, t: Table, snap: Snapshot,
-      bySpec: Map[Map[String, String], Seq[String]],
-      targetFiles: Int): Long = {
-    val statsCols = liveStatsCols(snap)
+      files: Seq[String], targetFiles: Int)(
+      worth: Seq[String] => Boolean): Long = {
     val schema = snap.schemaJson.map(parseSchema)
-    val stages = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try {
-      val groups = bySpec.toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
-        .map { case (spec, files) =>
-          val stage = newStage(t, t.dataDir)
-          stages += stage
-          // dv-aware reads: compacting a DV-carrying file
-          // MATERIALIZES the vector away (dead rows dropped in the
-          // rewrite; the remove clears the dv entry at replay)
-          val df =
-            if (spec.isEmpty)
-              readFiles(s, t, files, snap.schemaJson, dvs = snap.dvs)
-            else {
-              val sc = schema.getOrElse(
-                throw new IllegalStateException(
-                  "partitioned compaction needs a registered schema"))
-              val dataFields = sc.fields
-                .filterNot(f => spec.contains(f.name)).toIndexedSeq
-              toLogical(dvAware(s, t,
-                fs => s.read
-                  .schema(physicalSchema(StructType(dataFields)))
-                  .parquet(fs.map(r => t.root.resolve(r).toString): _*),
-                files, snap.dvs, withPos = false),
-                dataFields)
-            }
-          toPhysical(df.coalesce(targetFiles), schema)
-            .write.parquet(stage.toString)
-          val lines = addLinesFor(s, t, stage,
-            statsCols.filterNot(spec.contains))
-          val pTok = spec.toSeq.sortBy(_._1)
-            .map { case (c, v) => s"part=${escapePart(c)}=${escapePart(v)}" }
-          val decorated =
-            if (spec.isEmpty) lines
-            else lines.map(decorateAdd(_, pTok))
-          (files, decorated)
-        }
-      commit(t, snap.version, adds = Nil,
-        removes = groups.flatMap(_._1),
-        extra = groups.flatMap(_._2) ++ noopRewriteLines,
-        reconcileDisjoint = true)
-    } finally seal(t, stages.toSeq: _*)
+    val groups = files
+      .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty))
+      .filter(g => worth(g._2))
+      .toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
+    if (groups.isEmpty) return snap.version
+    runRewrite(s, t, Rewrite(snap, removes = groups.flatMap(_._2),
+      frames = groups.map { case (spec, group) =>
+        // dv-aware reads: compacting a DV-carrying file
+        // MATERIALIZES the vector away (dead rows dropped in the
+        // rewrite; the remove clears the dv entry at replay)
+        val df =
+          if (spec.isEmpty)
+            readFiles(s, t, group, snap.schemaJson, dvs = snap.dvs)
+          else {
+            val sc = schema.getOrElse(
+              throw new IllegalStateException(
+                "partitioned compaction needs a registered schema"))
+            val dataFields = sc.fields
+              .filterNot(f => spec.contains(f.name)).toIndexedSeq
+            toLogical(dvAware(s, t,
+              fs => s.read
+                .schema(physicalSchema(StructType(dataFields)))
+                .parquet(fs.map(r => t.root.resolve(r).toString): _*),
+              group, snap.dvs, withPos = false),
+              dataFields)
+          }
+        Frame(df.coalesce(targetFiles), spec = Some(spec))
+      },
+      rowsUnchanged = true, reconcile = true))
   }
 
   /** PARTITION-SCOPED OPTIMIZE — `OPTIMIZE t WHERE day = 'd1'`: only
@@ -1912,15 +1921,8 @@ object TxnLog {
         s"${bad.mkString(", ")} (partition columns: " +
         s"${partCols.mkString(", ")}) — scoped compaction keys on " +
         "the layout")
-    val bySpec = snap.liveFiles
-      .filter { rel =>
-        val p = snap.filePartitions.getOrElse(rel, Map.empty)
-        spec.forall { case (c, v) => p.get(c).contains(v) }
-      }
-      .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty))
-      .filter(_._2.length >= 2)
-    if (bySpec.isEmpty) return snap.version
-    compactGroups(s, t, snap, bySpec, targetFiles)
+    compactGroups(s, t, snap, filesIn(snap, spec), targetFiles)(
+      _.length >= 2)
   }
 
   /** OPTIMIZE ZORDER BY (colA, colB): [[compact]]'s clustered form —
@@ -1965,30 +1967,11 @@ object TxnLog {
       s"zorder keys must be data columns, not partition columns " +
         s"(${partCols.mkString(", ")}) — the layout already clusters " +
         "on those")
-    val statsCols = (liveStatsCols(snap) ++ keys).distinct.sorted
-      .filterNot(partCols.contains)
-    val stage = newStage(t, t.dataDir)
-    try {
-      val clustered = readRels(s, t, snap, snap.liveFiles)
-        .withColumn("_z", graft.functions.ZOrder.zValueN(keys))
+    compactLive(s, t, snap, keys)(
+      _.withColumn("_z", graft.functions.ZOrder.zValueN(keys))
         .repartitionByRange(targetFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
-        .drop("_z")
-      // a partitioned table z-clusters WITHIN its layout (tokens
-      // re-emitted) — same no-silent-flattening rule as compact
-      val out = toPhysical(clustered, snap.schemaJson.map(parseSchema))
-      val adds =
-        if (partCols.isEmpty) {
-          out.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, statsCols)
-        } else {
-          out.write.partitionBy(partCols: _*)
-            .parquet(stage.toString)
-          partitionedAddLines(s, t, stage, statsCols)
-        }
-      commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
-        extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
-    } finally seal(t, stage)
+        .drop("_z"))
   }
 
   /** [[readPruned]] for a conjunction of range predicates — the box
@@ -2067,57 +2050,16 @@ object TxnLog {
       if (partCols.nonEmpty) return appendPartitioned(s, t, df, partCols)
       return appendLines(s, t, df, extraLines = Nil, statsCols = Nil)
     }
+    // a replace may carry a partition layout forward (the SQL
+    // INSERT OVERWRITE / Complete-mode sink contract: no write op
+    // silently flattens a partitioned table)
     val snap = snapshot(t)
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // a replace may carry a partition layout forward (the SQL
-      // INSERT OVERWRITE / Complete-mode sink contract: no write op
-      // silently flattens a partitioned table)
-      val addLines =
-        if (partCols.isEmpty) {
-          df.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, Nil)
-        } else {
-          df.write.partitionBy(partCols: _*).parquet(stage.toString)
-          partitionedAddLines(s, t, stage, Nil)
-        }
-      enforceStaged(s, t, Seq(stage), snap.constraints)
-      val rels = stagedFiles(t, stage)
-      val schemaLine =
+    runRewrite(s, t, Rewrite(snap, removes = snap.liveFiles,
+      frames = Seq(Frame(df, check = true, cdcInsert = true)),
+      victimCdc = true, redefine = Some(partCols),
+      header = () =>
         if (snap.schemaJson.contains(df.schema.json)) Nil
-        else Seq(s"schema\t${df.schema.json}")
-      // a no-removes commit's adds auto-count as the insert wave:
-      // cdc refs there would deliver every staged row twice (the
-      // empty-live-set overwrite — e.g. after a delete-all)
-      val cdc =
-        if (snap.liveFiles.isEmpty) Nil
-        else replaceVictimCdc(s, t, snap, snap.liveFiles, cdcStage) ++
-          rels.map(r => s"cdc\t$r\tinsert")
-      commit(t, snap.version, adds = Nil,
-        removes = snap.liveFiles,
-        extra = schemaLine ++ addLines ++ cdc)
-    } finally seal(t, stage, cdcStage)
-  }
-
-  /** Victim-side CDF for a whole-set replace: vector-FREE victims
-    * ride zero-copy `cdc delete` refs; a victim CARRYING a deletion
-    * vector stages its LIVE rows as a change file instead — a raw
-    * ref would re-deliver its dead rows (the same rule the scoped
-    * replaces apply). */
-  private def replaceVictimCdc(s: SparkSession, t: Table,
-      snap: Snapshot, victims: Seq[String], cdcStage: Path)
-      : Seq[String] = {
-    val (dvVictims, plainVictims) = victims.partition(snap.dvs.contains)
-    val dvCdc =
-      if (dvVictims.isEmpty) Nil
-      else {
-        toPhysical(readRels(s, t, snap, dvVictims),
-          snap.schemaJson.map(parseSchema))
-          .write.parquet(cdcStage.toString)
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-      }
-    plainVictims.map(r => s"cdc\t$r\tdelete") ++ dvCdc
+        else Seq(s"schema\t${df.schema.json}")))
   }
 
   /** Partition-scoped OVERWRITE — Delta's `replaceWhere` / SQL
@@ -2159,35 +2101,20 @@ object TxnLog {
         s"(partition columns: ${partCols.mkString(", ")}); " +
         s"got filter(s) on: ${nonPart.toSeq.sorted.mkString(", ")} — " +
         "use DELETE FROM + INSERT for row-scoped rewrites")
-    val blind = snap.liveFiles.filter { rel =>
-      val p = snap.filePartitions.getOrElse(rel, Map.empty)
-      spec.exists { case (c, _) => !p.contains(c) }
-    }
-    require(blind.isEmpty,
-      s"replaceWhere cannot scope ${blind.length} live file(s) with " +
-        s"no recorded values for (${spec.keys.toSeq.sorted.mkString(", ")}) " +
-        s"(e.g. ${blind.take(2).mkString(", ")}); compact the table " +
-        "back into partition discipline first")
+    requireScoped(snap, spec.keys.toSeq.sorted, "replaceWhere")
     val missing = spec.keySet -- df.columns.toSet
     require(missing.isEmpty,
       s"replaceWhere input is missing scoped partition column(s): " +
         missing.toSeq.sorted.mkString(", "))
-    val victims = snap.liveFiles.filter { rel =>
-      val p = snap.filePartitions.getOrElse(rel, Map.empty)
-      spec.forall { case (c, v) => p.get(c).contains(v) }
-    }
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols,
-        liveStatsCols(snap), snap.schemaJson)
+    val victims = filesIn(snap, spec)
+    runRewrite(s, t, scopedReplace(t, snap, df, allowWiden) { adds =>
       // Delta's scope validation, on the STAGED OUTPUT rather than a
       // separate pass over the input plan — a nondeterministic source
       // could satisfy a pre-staging check and then stage DIFFERENT
       // rows, landing data the overwrite never claimed to touch; the
       // staged partition tokens are what will actually commit, and
       // checking them costs zero extra jobs
-      val strays = addLines.flatMap { line =>
+      val strays = adds.flatMap { line =>
         val toks = addLineParts(line)
         spec.collectFirst { case (c, v) if !toks.get(c).contains(v) =>
           s"$c=${toks.getOrElse(c, "<none>")}"
@@ -2197,9 +2124,8 @@ object TxnLog {
         s"replaceWhere(${spec.map { case (c, v) => s"$c=$v" }
           .mkString(", ")}) received row(s) outside the scoped " +
           s"partition(s): ${strays.distinct.take(3).mkString(", ")}")
-      replaceScopedCommit(s, t, snap, victims, stage, cdcStage,
-        addLines, df.schema, allowWiden)
-    } finally seal(t, stage, cdcStage)
+      Some(victims)
+    })
   }
 
   /** DYNAMIC partition overwrite — `writeTo(t).overwritePartitions()`
@@ -2223,35 +2149,23 @@ object TxnLog {
       s"dynamic partition overwrite needs a partitioned table " +
         s"(${t.root} has no partition layout); use a whole-table " +
         "overwrite instead")
-    val blind = snap.liveFiles.filter { rel =>
-      val p = snap.filePartitions.getOrElse(rel, Map.empty)
-      partCols.exists(!p.contains(_))
-    }
-    require(blind.isEmpty,
-      s"dynamic partition overwrite cannot scope ${blind.length} " +
-        s"live file(s) with no recorded values for " +
-        s"(${partCols.mkString(", ")}) " +
-        s"(e.g. ${blind.take(2).mkString(", ")}); compact the table " +
-        "back into partition discipline first")
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols,
-        liveStatsCols(snap), snap.schemaJson)
-      if (addLines.isEmpty) return snap.version // empty input: no-op
-      val stagedSpecs: Set[Map[String, String]] = addLines.map { l =>
-        val toks = addLineParts(l)
-        partCols.map(c => c -> toks.getOrElse(c,
-          throw new IllegalStateException(
-            s"staged file missing partition token for $c"))).toMap
-      }.toSet
-      val victims = snap.liveFiles.filter { rel =>
-        val p = snap.filePartitions.getOrElse(rel, Map.empty)
-        stagedSpecs.contains(partCols.map(c => c -> p(c)).toMap)
+    requireScoped(snap, partCols, "dynamic partition overwrite")
+    runRewrite(s, t, scopedReplace(t, snap, df, allowWiden) { adds =>
+      // an empty input replaces nothing and commits nothing
+      if (adds.isEmpty) None
+      else {
+        val stagedSpecs: Set[Map[String, String]] = adds.map { l =>
+          val toks = addLineParts(l)
+          partCols.map(c => c -> toks.getOrElse(c,
+            throw new IllegalStateException(
+              s"staged file missing partition token for $c"))).toMap
+        }.toSet
+        Some(snap.liveFiles.filter { rel =>
+          val p = snap.filePartitions.getOrElse(rel, Map.empty)
+          stagedSpecs.contains(partCols.map(c => c -> p(c)).toMap)
+        })
       }
-      replaceScopedCommit(s, t, snap, victims, stage, cdcStage,
-        addLines, df.schema, allowWiden)
-    } finally seal(t, stage, cdcStage)
+    })
   }
 
   /** SHALLOW CLONE — a ZERO-COPY table fork (Delta's CLONE, the
@@ -2367,47 +2281,37 @@ object TxnLog {
       s"bad property key: '$k'"))
     val snap =
       if (latestVersion(t) < 0) None else Some(snapshot(t))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // the staged data routes through the NEW layout and the NEW
-      // schema (a replace has no mapping/constraints to honor — it
-      // defines them)
-      val addLines = data.toSeq.flatMap(df =>
-        stageAdds(s, t, df, stage, partCols, Nil, None))
-      val removes = snap.map(_.liveFiles).getOrElse(Nil)
-      val oldProps = snap.map(_.properties).getOrElse(Map.empty)
-      val propLines =
-        oldProps.keySet.diff(props.keySet).toSeq.sorted
-          .map(k => s"unsetproperty\t$k") ++
-        props.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"property\t$k\t${escapePart(v)}" }
-      val consLines = snap.toSeq.flatMap(sn =>
-        sn.notNull.toSeq.sorted.map(c => s"dropconstraint\tnotnull\t$c") ++
-        sn.checks.keys.toSeq.sorted.map(n => s"dropconstraint\tcheck\t$n"))
-      val cdc =
-        if (removes.isEmpty) Nil
-        else replaceVictimCdc(s, t, snap.get, removes, cdcStage) ++
-          stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
-      // the partcols line is ALWAYS emitted (empty clears a previous
-      // declaration) — the layout is part of the definition
-      val header =
-        (if (schema.fields.exists(_.metadata.contains(ExistsDefaultKey)))
-          Seq(ProtocolV4Line)
-         else Nil) ++
-        Seq(s"schema\t${schema.json}",
-          "partcols\t" + partCols.map(escapePart).mkString(",")) ++
-        // the old definition is fully superseded: no live file holds
-        // a dropped column's bytes anymore, so the tombstones lift —
-        // a post-replace ADD COLUMNS of a once-dropped name is safe
-        (if (snap.isEmpty) Nil else Seq("cleardropped"))
-      val v = commit(t, snap.map(_.version).getOrElse(-1L), adds = Nil,
-        removes = removes,
-        extra = header ++ propLines ++ consLines ++ addLines ++ cdc,
-        forceClaim = true)
-      checkpoint(t, v) // republish the header: see scaladoc
-      v
-    } finally seal(t, stage, cdcStage)
+    val oldProps = snap.map(_.properties).getOrElse(Map.empty)
+    val propLines =
+      oldProps.keySet.diff(props.keySet).toSeq.sorted
+        .map(k => s"unsetproperty\t$k") ++
+      props.toSeq.sortBy(_._1).map { case (k, v) =>
+        s"property\t$k\t${escapePart(v)}" }
+    val consLines = snap.toSeq.flatMap(sn =>
+      sn.notNull.toSeq.sorted.map(c => s"dropconstraint\tnotnull\t$c") ++
+      sn.checks.keys.toSeq.sorted.map(n => s"dropconstraint\tcheck\t$n"))
+    // the partcols line is ALWAYS emitted (empty clears a previous
+    // declaration) — the layout is part of the definition
+    val header =
+      (if (schema.fields.exists(_.metadata.contains(ExistsDefaultKey)))
+        Seq(ProtocolV4Line)
+       else Nil) ++
+      Seq(s"schema\t${schema.json}",
+        "partcols\t" + partCols.map(escapePart).mkString(",")) ++
+      // the old definition is fully superseded: no live file holds
+      // a dropped column's bytes anymore, so the tombstones lift —
+      // a post-replace ADD COLUMNS of a once-dropped name is safe
+      (if (snap.isEmpty) Nil else Seq("cleardropped"))
+    // the staged data routes through the NEW layout and the NEW
+    // schema (a replace has no mapping/constraints to honor — it
+    // defines them); an empty location's snapshot is version -1
+    val v = runRewrite(s, t, Rewrite(snap.getOrElse(Snapshot(-1L, Nil)),
+      removes = snap.map(_.liveFiles).getOrElse(Nil),
+      frames = data.toSeq.map(Frame(_, cdcInsert = true)),
+      victimCdc = true, redefine = Some(partCols),
+      header = () => header ++ propLines ++ consLines, forceClaim = true))
+    checkpoint(t, v) // republish the header: see scaladoc
+    v
   }
 
   /** ARBITRARY-PREDICATE overwrite — Delta ≥1.1's general
@@ -2436,113 +2340,67 @@ object TxnLog {
                        pred: Column,
                        snap0: Option[Snapshot] = None,
                        allowWiden: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col,
-      input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val snap = snap0.getOrElse(snapshot(t))
-    // see replaceScopedCommit: unknown columns register in the same
-    // commit (additive), wider types need the mergeSchema opt-in
-    val (mergedReg, regChanged, widened) =
-      mergedSchema(t, snap.schemaJson.map(parseSchema), df.schema,
-        allowWiden)
-    val schemaLine =
-      (if (widened) Seq(ProtocolV2Line) else Nil) ++
-      (if (regChanged) Seq(s"schema\t${mergedReg.json}") else Nil)
+    // see scopedReplace: unknown columns register in the same commit
+    // (additive), wider types need the mergeSchema opt-in
+    val merged = mergedSchema(t, snap.schemaJson.map(parseSchema),
+      df.schema, allowWiden)
     val partCols = snap.partCols
-    val statsCols = liveStatsCols(snap)
     val cond = coalesce(pred, lit(false))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    val survivorStage = newStage(t, t.dataDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols, statsCols,
-        snap.schemaJson)
-      // scope validation on what will actually commit: read the
-      // staged files back (physical → logical under a mapping) and
-      // refuse on the first out-of-scope row — one bounded job.
-      // Partition values would otherwise come back through Spark's
-      // partition-TYPE INFERENCE (r20 verdict: a STRING partition
-      // column whose tokens look numeric — "0012" — reads back as an
-      // integer, mis-evaluating the stray-row probe and corrupting
-      // leading zeros): pin an EXPLICIT read schema — the staged data
-      // columns as written plus every partition column as STRING (the
-      // uninferred token) — and re-assert each partition column's
-      // REGISTERED type below. (r21 verdict item: the old shape
-      // toggled partitionColumnTypeInference on the shared session
-      // conf around the read, which is unsafe the moment two
-      // statements share the session concurrently — Bench's staging
-      // pool introduced exactly that; an explicit schema touches no
-      // session state.)
-      if (addLines.nonEmpty) {
-        val dataFields = toPhysical(df, snap.schemaJson.map(parseSchema))
-          .schema.fields.filterNot(f => partCols.contains(f.name))
-        val probeSchema = StructType(dataFields ++ partCols.map(pc =>
-          org.apache.spark.sql.types.StructField(pc,
-            org.apache.spark.sql.types.StringType)))
-        val raw = s.read.schema(probeSchema).parquet(stage.toString)
-        val stagedDf = snap.schemaJson.map(parseSchema) match {
-          case Some(sc) if hasMapping(sc) =>
-            val m = sc.fields.map(f => physicalName(f) -> f.name).toMap
-            raw.select(raw.columns.toIndexedSeq.map(c =>
-              col(c).as(m.getOrElse(c, c))): _*)
-          case _ => raw
-        }
-        val declType = mergedReg.fields.map(f => f.name -> f.dataType).toMap
-        val typed = partCols.foldLeft(stagedDf)((acc, pc) =>
-          declType.get(pc)
-            .map(dt => acc.withColumn(pc, col(pc).cast(dt)))
-            .getOrElse(acc))
-        val stray = typed.filter(not(cond)).limit(1).collect()
-        require(stray.isEmpty,
-          s"replaceWhere received row(s) outside the predicate's " +
-            s"scope, e.g.: ${stray.headOption.getOrElse("")} — every " +
-            "incoming row must satisfy the replaceWhere condition")
-      }
-      // victims: only files that CONTAIN matching rows rewrite
-      val candidates = {
-        val box = dmlBox(pred)
-        if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-      }
-      val affectedRel =
-        if (candidates.isEmpty) Nil
-        else relsOf(t, snap,
-          readRels(s, t, snap, candidates)
-            .withColumn("_f", input_file_name())
-            .filter(cond)
-            .select(col("_f")).distinct()
-            .collect() // file-count scale: one row per affected file
-            .map(_.getString(0)).toSeq)
-      if (addLines.isEmpty && affectedRel.isEmpty) return snap.version
-      val affected =
-        if (affectedRel.isEmpty) None
-        else Some(readRels(s, t, snap, affectedRel))
-      // survivor restage, incoming-stage constraint check and the
-      // old-image change-file write are independent sliver-scale jobs
-      // — overlapped (stagedPar, §2.6); refusals still precede commit
-      val stagedOut = stagedPar(Seq(
-        () => affected.toSeq.flatMap(a =>
-          stageAdds(s, t, a.filter(not(cond)), survivorStage, partCols,
-            statsCols, snap.schemaJson)),
-        () => {
-          enforceStaged(s, t, Seq(stage), snap.constraints)
-          Seq.empty[String]
-        },
-        () => affected.toSeq.flatMap { a =>
-          toPhysical(a.filter(cond), snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val survivorAdds = stagedOut(0)
-      val deleteCdc = stagedOut(2)
-      // an insert-only outcome (nothing matched) is a plain insert
-      // wave: its adds auto-count in the feed, cdc refs would double
-      val insertCdc =
-        if (affectedRel.isEmpty) Nil
-        else stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = schemaLine ++ addLines ++ survivorAdds ++ deleteCdc ++
-          insertCdc,
-        forceClaim = true)
-    } finally seal(t, stage, cdcStage, survivorStage)
+    // victims: only files that CONTAIN matching rows rewrite
+    val affectedRel =
+      locate(s, t, snap, dmlCandidates(snap, pred))(_.filter(cond))
+    val affected =
+      if (affectedRel.isEmpty) None
+      else Some(readRels(s, t, snap, affectedRel))
+    // scope validation on what will actually commit: read the staged
+    // files back (physical → logical under a mapping) and refuse on
+    // the first out-of-scope row — one bounded job. Partition values
+    // would otherwise come back through Spark's partition-TYPE
+    // INFERENCE (a STRING partition column whose tokens look numeric
+    // — "0012" — reads back as an integer, mis-evaluating the
+    // stray-row probe and corrupting leading zeros): pin an EXPLICIT
+    // read schema — the staged data columns as written plus every
+    // partition column as STRING (the uninferred token) — and
+    // re-assert each partition column's REGISTERED type below. An
+    // explicit schema also touches no session state, which toggling
+    // partitionColumnTypeInference on the shared session conf would —
+    // unsafe the moment two statements share the session concurrently.
+    def probe(stage: Path): Unit = {
+      val dataFields = toPhysical(df, snap.schemaJson.map(parseSchema))
+        .schema.fields.filterNot(f => partCols.contains(f.name))
+      val probeSchema = StructType(dataFields ++ partCols.map(pc =>
+        org.apache.spark.sql.types.StructField(pc,
+          org.apache.spark.sql.types.StringType)))
+      val stagedDf = toLogicalNames(
+        s.read.schema(probeSchema).parquet(stage.toString),
+        snap.schemaJson.map(parseSchema))
+      val declType = merged._1.fields.map(f => f.name -> f.dataType).toMap
+      val typed = partCols.foldLeft(stagedDf)((acc, pc) =>
+        declType.get(pc)
+          .map(dt => acc.withColumn(pc, col(pc).cast(dt)))
+          .getOrElse(acc))
+      val stray = typed.filter(not(cond)).limit(1).collect()
+      require(stray.isEmpty,
+        s"replaceWhere received row(s) outside the predicate's " +
+          s"scope, e.g.: ${stray.headOption.getOrElse("")} — every " +
+          "incoming row must satisfy the replaceWhere condition")
+    }
+    // the incoming rows, the touched files' survivors and the matched
+    // rows' old images stage in one wave; the probe and the constraint
+    // check still refuse before anything commits
+    runRewrite(s, t, Rewrite(snap,
+      frames = Frame(df, check = true, cdcInsert = true) +:
+        affected.map(a => Frame(a.filter(not(cond)))).toSeq,
+      oldImages = affected.map(_.filter(cond)),
+      header = () => schemaHeader(merged),
+      scope = Some { (stage, adds) =>
+        if (adds.nonEmpty) probe(stage)
+        if (adds.isEmpty && affectedRel.isEmpty) None
+        else Some(affectedRel)
+      },
+      forceClaim = true))
   }
 
   /** Partition tokens of a decorated add line, DECODED (the form
@@ -2554,134 +2412,336 @@ object TxnLog {
         case _           => None
       }).toMap
 
-  /** The scoped-replace commit tail [[replaceWhere]] and
-    * [[replaceDynamic]] share: constraint enforcement on the staged
-    * files, exact CDF (zero-copy refs for clean victims, staged live
-    * rows for dv carriers, NO cdc refs on an insert-only backfill —
-    * its adds auto-count), and a slot-claiming commit (forceClaim:
-    * even with zero victims, a concurrent insert into a replaced
-    * partition must refuse, not silently survive). */
-  private def replaceScopedCommit(s: SparkSession, t: Table,
-      snap: Snapshot, victims: Seq[String], stage: Path,
-      cdcStage: Path, addLines: Seq[String],
-      incoming: StructType, allowWiden: Boolean): Long = {
-    enforceStaged(s, t, Seq(stage), snap.constraints)
-    // the incoming shape must merge against the registered schema —
-    // an unknown column would otherwise land in the files but never
-    // register (silently dropped by every pinned read), and a wider
-    // type would poison pinned-narrow scans; additive columns
-    // register in the SAME commit, widening needs the mergeSchema
-    // opt-in like every other write
-    val (mergedReg, regChanged, widened) =
-      mergedSchema(t, snap.schemaJson.map(parseSchema), incoming,
-        allowWiden)
-    val schemaLine =
-      (if (widened) Seq(ProtocolV2Line) else Nil) ++
-      (if (regChanged) Seq(s"schema\t${mergedReg.json}") else Nil)
-    val rels = stagedFiles(t, stage)
-    val (dvVictims, plainVictims) =
-      victims.partition(snap.dvs.contains)
-    val dvCdc =
-      if (dvVictims.isEmpty) Nil
-      else {
-        toPhysical(readRels(s, t, snap, dvVictims),
-          snap.schemaJson.map(parseSchema))
-          .write.parquet(cdcStage.toString)
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-      }
-    val cdc =
-      if (victims.isEmpty) Nil
-      else plainVictims.map(r => s"cdc\t$r\tdelete") ++ dvCdc ++
-        rels.map(r => s"cdc\t$r\tinsert")
-    commit(t, snap.version, adds = Nil, removes = victims,
-      extra = schemaLine ++ addLines ++ cdc, forceClaim = true)
+  /** The [[Rewrite]] [[replaceWhere]] and [[replaceDynamic]] share:
+    * the incoming rows stage constraint-checked as the `cdc insert`
+    * frame, `scope` resolves the victims from the staged add lines
+    * (refusing strays first; None commits nothing), the victims ride
+    * as zero-copy change refs, and the commit claims its slot
+    * (forceClaim: even with zero victims, a concurrent insert into a
+    * replaced partition must refuse, not silently survive). The incoming shape must merge
+    * against the registered schema — an unknown column would
+    * otherwise land in the files but never register (silently dropped
+    * by every pinned read), and a wider type would poison
+    * pinned-narrow scans; additive columns register in the SAME
+    * commit, widening needs the mergeSchema opt-in like every other
+    * write (refused after the scope and the constraint check). */
+  private def scopedReplace(t: Table, snap: Snapshot, df: DataFrame,
+      allowWiden: Boolean)(
+      scope: Seq[String] => Option[Seq[String]]): Rewrite =
+    Rewrite(snap, frames = Seq(Frame(df, check = true, cdcInsert = true)),
+      victimCdc = true,
+      header = () => schemaHeader(mergedSchema(t,
+        snap.schemaJson.map(parseSchema), df.schema, allowWiden)),
+      scope = Some((_, adds) => scope(adds)), forceClaim = true)
+
+  /** Live files whose recorded partition values match every column of
+    * `spec`. */
+  private def filesIn(snap: Snapshot,
+                      spec: Map[String, String]): Seq[String] =
+    snap.liveFiles.filter { rel =>
+      val p = snap.filePartitions.getOrElse(rel, Map.empty)
+      spec.forall { case (c, v) => p.get(c).contains(v) }
+    }
+
+  /** A scoped overwrite refuses when a live file records no value for
+    * one of `cols`: a sliver some rewrite flattened out of the
+    * partition layout could hold in-scope rows that would silently
+    * survive. */
+  private def requireScoped(snap: Snapshot, cols: Seq[String],
+                            op: String): Unit = {
+    val blind = snap.liveFiles.filter { rel =>
+      val p = snap.filePartitions.getOrElse(rel, Map.empty)
+      cols.exists(!p.contains(_))
+    }
+    require(blind.isEmpty,
+      s"$op cannot scope ${blind.length} live file(s) with no recorded " +
+        s"values for (${cols.mkString(", ")}) (e.g. " +
+        s"${blind.take(2).mkString(", ")}); compact the table back into " +
+        "partition discipline first")
   }
 
-  /** The manifest box a DML predicate implies: its top-level AND
-    * conjuncts of the shape `col <op> <integral literal>` become
-    * min/max ranges (`pruneBox` keeps stats-less files, so an
-    * untracked column simply never prunes). Everything else — OR
-    * branches, arithmetic, functions — contributes no range, which
-    * degrades to the full locating scan, never to a wrong answer. */
-  private def dmlBox(pred: Column): Seq[(String, Long, Long)] =
-    org.apache.spark.sql.graftshim.Shim.comparisonConjuncts(pred).flatMap {
-      case (c, "=", v)  => Some((c, v, v))
-      case (c, "<=", v) => Some((c, Long.MinValue, v))
-      case (c, ">=", v) => Some((c, v, Long.MaxValue))
-      case (c, "<", v) if v != Long.MinValue =>
-        Some((c, Long.MinValue, v - 1))
-      case (c, ">", v) if v != Long.MaxValue =>
-        Some((c, v + 1, Long.MaxValue))
-      case _ => None
-    }
+  /** The header lines of a write whose incoming shape merged against
+    * the registered schema ([[mergedSchema]]'s result): the schema
+    * when it changed, preceded by the type-widening protocol floor
+    * when a column widened. */
+  private def schemaHeader(merged: (StructType, Boolean, Boolean))
+      : Seq[String] = {
+    val (schema, changed, widened) = merged
+    (if (widened) Seq(ProtocolV2Line) else Nil) ++
+      (if (changed) Seq(s"schema\t${schema.json}") else Nil)
+  }
+
+  /** The candidate files a DML predicate's locating scan must open:
+    * its top-level AND conjuncts of the shape `col <op> <integral
+    * literal>` become a min/max box pruned against the manifest
+    * ([[pruneBox]] keeps stats-less files, so an untracked column
+    * simply never prunes). Everything else — OR branches,
+    * arithmetic, functions — contributes no range, which degrades to
+    * the full locating scan, never to a wrong answer. */
+  private def dmlCandidates(snap: Snapshot, pred: Column): Seq[String] =
+    pruneBox(snap,
+      org.apache.spark.sql.graftshim.Shim.comparisonConjuncts(pred).flatMap {
+        case (c, "=", v)  => Some((c, v, v))
+        case (c, "<=", v) => Some((c, Long.MinValue, v))
+        case (c, ">=", v) => Some((c, v, Long.MaxValue))
+        case (c, "<", v) if v != Long.MinValue =>
+          Some((c, Long.MinValue, v - 1))
+        case (c, ">", v) if v != Long.MaxValue =>
+          Some((c, v + 1, Long.MaxValue))
+        case _ => None
+      })
 
   /** (candidate files the DML locating scan would open, files live)
     * for `predicate` — the stats-pruned DML audit, data-free. */
   def plannedFilesDml(t: Table, predicate: Column): (Int, Int) = {
     val snap = snapshot(t)
-    val box = dmlBox(predicate)
-    val cand = if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    (cand.length, snap.liveFiles.length)
+    (dmlCandidates(snap, predicate).length, snap.liveFiles.length)
   }
 
-  /** Run a statement's INDEPENDENT staging writes concurrently
-    * (guide §2.6 — overlap independent jobs): each thunk is a
-    * self-contained write into its own stage dir, and these are all
-    * small sliver-scale jobs whose wall time is stage latency, not
+  /** Run a statement's INDEPENDENT staging writes concurrently: each
+    * thunk is a self-contained write into its own stage dir, and these
+    * are small sliver-scale jobs whose wall time is stage latency, not
     * throughput, so overlapping them back-fills the executor slots a
-    * single write leaves idle (the Bench `_staging_tables` pool
-    * precedent). Results come back in input order; a failure
-    * rethrows the ORIGINAL builder exception, so refusal semantics
-    * (constraints, scope probes) are unchanged. Spark job submission
-    * is thread-safe and job descriptions are thread-local
-    * (inherited), per the guide. */
-  private def stagedPar[A](thunks: Seq[() => A]): Seq[A] = {
+    * single write leaves idle. Results come back in input order; a
+    * failure rethrows the ORIGINAL thunk exception, so refusal
+    * semantics (constraints, scope probes) are unchanged, and only
+    * after every sibling thunk has run to its end: the caller's seal
+    * must never remove the in-flight marker of a stage some sibling
+    * is still writing. Siblings are not interrupted — an interrupted
+    * driver thread abandons its Spark job, whose tasks keep writing
+    * into the stage. Spark job submission is thread-safe and job
+    * descriptions are thread-local (inherited). */
+  private[graft] def stagedPar[A](thunks: Seq[() => A]): Seq[A] = {
     if (thunks.length <= 1) return thunks.map(_())
     val pool =
       java.util.concurrent.Executors.newFixedThreadPool(thunks.length)
-    try {
-      val futs = thunks.map(th => pool.submit(
-        new java.util.concurrent.Callable[A] { def call(): A = th() }))
-      futs.map { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
-
-  /** Stage `df` under `stage` and return its add-action lines,
-    * THROUGH the partition layout when the table has one — the one
-    * staging shape every rewrite op (delete, update, merge,
-    * mergeInto) shares, so none of them can silently flatten files
-    * out of partition discipline. Partitioned stats drop the
-    * partition columns (they are not in the data files). */
-  private def stageAdds(s: SparkSession, t: Table, df: DataFrame,
-      stage: Path, partCols: Seq[String],
-      statsCols: Seq[String],
-      schemaJson: Option[String] = None): Seq[String] = {
-    // the files hold PHYSICAL names (no-op without a mapping);
-    // partition columns never map, so partitionBy stays logical
-    val out = toPhysical(df, schemaJson.map(parseSchema))
-    if (partCols.isEmpty) {
-      out.write.parquet(stage.toString)
-      addLinesFor(s, t, stage, statsCols)
-    } else {
-      out.write.partitionBy(partCols: _*).parquet(stage.toString)
-      partitionedAddLines(s, t, stage,
-        statsCols.filterNot(partCols.contains))
+    val futs = thunks.map(th => pool.submit(
+      new java.util.concurrent.Callable[A] { def call(): A = th() }))
+    pool.shutdown()
+    try futs.map { f =>
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        throw e.getCause }
+    } catch { case e: Throwable =>
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+      throw e
     }
   }
 
-  /** Map input_file_name URIs back to the snapshot's relative live
-    * paths — the rewrite ops' touched-file resolution. */
-  private def relsOf(t: Table, snap: Snapshot,
-                     uris: Seq[String]): Seq[String] = {
+  /** One frame a rewrite stages as new data files, into its own stage.
+    * `check`: enforce the table's constraints over the staged rows —
+    * new rows only; survivors restage byte-identical and already
+    * satisfied them. `cdcInsert`: the staged files double as the
+    * commit's `cdc insert` refs (new images and inserts: change files
+    * may point at live data files, nothing is written twice). `spec`:
+    * stage FLAT and stamp these partition tokens on every add — a
+    * compaction group rewriting inside one partition — instead of
+    * routing through the layout. */
+  private final case class Frame(df: DataFrame, check: Boolean = false,
+      cdcInsert: Boolean = false,
+      spec: Option[Map[String, String]] = None)
+
+  /** One rewrite commit, described: what [[runRewrite]] stages, checks
+    * and publishes for every DML, replace and compaction op.
+    *  - `snap`: the statement's snapshot (base version, schema, layout,
+    *    constraints, vectors); `removes`: the victim files.
+    *  - `frames`: the new data files. `oldImages`: rows staged as the
+    *    `cdc delete` change file. `victimCdc`: the removes themselves
+    *    ride as zero-copy `cdc delete` refs (a replace's victims ARE
+    *    the old images), except that a victim carrying a deletion
+    *    vector stages its LIVE rows — a raw ref would re-deliver its
+    *    dead rows.
+    *  - `dv`: deletion-vector lines; `header`: schema, layout, property
+    *    and constraint lines, resolved once the frames are staged and
+    *    checked (a write's schema evolution refuses a widening only
+    *    after the constraint check); `trailer`: lines that ride last (a
+    *    sink's txn marker); `rowsUnchanged`: a compaction, which stamps
+    *    [[noopRewriteLines]] and stages its frames one after another.
+    *  - `stats`: columns to stamp (min, max) for on top of the
+    *    manifest-tracked ones (zorder keys). `redefine`: the statement
+    *    redefines the table (replace, CREATE OR REPLACE) — frames stage
+    *    through this layout with no stats and no column mapping.
+    *  - `scope`: resolves the removes once the FIRST frame is staged,
+    *    from its stage and add lines, before that frame's constraint
+    *    check — the scoped overwrites derive or validate their scope
+    *    from the rows that will actually commit, refusing before
+    *    anything does; None commits nothing (an empty overwrite).
+    *    `skipEmpty`: commit nothing when nothing is removed and no line
+    *    is written (a merge whose clauses fired on no row).
+    *  - commit policy, see [[commit]]: `reconcile` (its
+    *    reconcileDisjoint), `readSet`, `forceClaim`; `fence` = (app,
+    *    batch) of an exactly-once sink, which never reconciles — the
+    *    sink's loop recomputes against the fresh snapshot and
+    *    re-checks the fence instead. */
+  private final case class Rewrite(snap: Snapshot,
+      removes: Seq[String] = Nil,
+      frames: Seq[Frame] = Nil,
+      oldImages: Option[DataFrame] = None,
+      victimCdc: Boolean = false,
+      dv: Seq[String] = Nil,
+      header: () => Seq[String] = () => Nil,
+      trailer: Seq[String] = Nil,
+      rowsUnchanged: Boolean = false,
+      stats: Seq[String] = Nil,
+      redefine: Option[Seq[String]] = None,
+      scope: Option[(Path, Seq[String]) => Option[Seq[String]]] = None,
+      skipEmpty: Boolean = false,
+      reconcile: Boolean = false,
+      readSet: Set[String] = Set.empty,
+      forceClaim: Boolean = false,
+      fence: Option[(String, Long)] = None)
+
+  /** Run a [[Rewrite]] — the one staging-and-commit pipeline. Every
+    * frame and the old-image change file stage in one overlapped wave
+    * ([[stagedPar]]; a compaction's groups one after another), each
+    * frame THROUGH the partition layout (so no rewrite can silently
+    * flatten files out of partition discipline; partitioned stats drop
+    * the partition columns, which are not in the data files), the
+    * first one scoped and every flagged one constraint-checked, so a
+    * refusal throws before anything commits. Then the header
+    * resolves, a replace's victims become change refs, and the commit
+    * assembles in one fixed order: removes, protocol floor, header,
+    * adds, dv, cdc, rowstate, trailer. The rules every op shares live
+    * here:
+    *  - deletion vectors raise the reader floor in the same commit:
+    *    v3 when a vector rides a sidecar, v2 otherwise;
+    *  - an INSERT WAVE (nothing removed, no vector stamped) carries no
+    *    cdc refs — its adds auto-count in the feed, refs would deliver
+    *    every row twice — and publishes like an append: no read-set
+    *    claim unless `forceClaim`, and a fenced one through
+    *    [[fencedPublish]];
+    *  - the stages seal once the commit resolves, either way.
+    * Returns the committed version (the snapshot's when nothing
+    * committed). */
+  private def runRewrite(s: SparkSession, t: Table, rw: Rewrite): Long = {
+    require(!(rw.victimCdc && rw.oldImages.isDefined),
+      "a rewrite stages one old-image change file")
+    val snap = rw.snap
+    val schema = snap.schemaJson.map(parseSchema)
+    val (partCols, statsCols, physical) = rw.redefine match {
+      case Some(layout) => (layout, Nil, None)
+      case None => (snap.partCols,
+        (liveStatsCols(snap) ++ rw.stats).distinct.sorted, schema)
+    }
+    val stages = rw.frames.map(_ => newStage(t, t.dataDir))
+    val cdcStage =
+      if (rw.oldImages.isDefined || rw.victimCdc) Some(newStage(t, t.cdcDir))
+      else None
+    try {
+      // the scope resolves inside the first frame's thunk, between its
+      // write and its constraint check; None commits nothing
+      var resolved: Option[Seq[String]] = Some(rw.removes)
+      def stage(f: Frame, dir: Path): Seq[String] = {
+        // the files hold PHYSICAL names (no-op without a mapping);
+        // partition columns never map, so partitionBy stays logical
+        val out = toPhysical(f.df, physical)
+        val adds = f.spec match {
+          case Some(spec) =>
+            out.write.parquet(dir.toString)
+            val pTok = spec.toSeq.sortBy(_._1).map { case (c, v) =>
+              s"part=${escapePart(c)}=${escapePart(v)}" }
+            addLinesFor(s, t, dir, statsCols.filterNot(spec.contains))
+              .map(decorateAdd(_, pTok))
+          case None if partCols.isEmpty =>
+            out.write.parquet(dir.toString)
+            addLinesFor(s, t, dir, statsCols)
+          case None =>
+            out.write.partitionBy(partCols: _*).parquet(dir.toString)
+            partitionedAddLines(s, t, dir,
+              statsCols.filterNot(partCols.contains))
+        }
+        if (dir == stages.head)
+          rw.scope.foreach(sc => resolved = sc(dir, adds))
+        if (f.check && resolved.isDefined)
+          enforceStaged(s, t, dir, snap.constraints)
+        adds
+      }
+      // the change files stay flat: they are the feed, not the table
+      def stageOld(df: DataFrame): Seq[String] = {
+        val dir = cdcStage.get
+        toPhysical(df, schema).write.parquet(dir.toString)
+        stagedFiles(t, dir).map(r => s"cdc\t$r\tdelete")
+      }
+      val thunks =
+        rw.frames.zip(stages).map { case (f, dir) => () => stage(f, dir) } ++
+        rw.oldImages.map(df => () => stageOld(df))
+      // a compaction's group writes run one after another: no bound
+      // on a wave of one write per partition group has been measured
+      val staged =
+        if (rw.rowsUnchanged) thunks.map(_()) else stagedPar(thunks)
+      val removes = resolved.getOrElse(return snap.version)
+      val header = rw.header()
+      val adds = staged.take(rw.frames.length).flatten
+      val insertWave = removes.isEmpty && rw.dv.isEmpty
+      val cdc =
+        if (insertWave) Nil
+        else {
+          val victimRefs =
+            if (!rw.victimCdc) Nil
+            else {
+              val (dvVictims, plain) = removes.partition(snap.dvs.contains)
+              plain.map(r => s"cdc\t$r\tdelete") ++
+                (if (dvVictims.isEmpty) Nil
+                 else stageOld(readRels(s, t, snap, dvVictims)))
+            }
+          victimRefs ++ staged.drop(rw.frames.length).flatten ++
+            rw.frames.zip(stages).filter(_._1.cdcInsert)
+              .flatMap(fs => stagedFiles(t, fs._2))
+              .map(r => s"cdc\t$r\tinsert")
+        }
+      val floor =
+        if (rw.dv.exists(_.split('\t')(2).startsWith("@")))
+          Seq(ProtocolV3Line) // sidecar refs demand a v3 reader
+        else if (rw.dv.nonEmpty) Seq(ProtocolV2Line)
+        else Nil
+      val lines = floor ++ header ++ adds ++ rw.dv ++ cdc ++
+        (if (rw.rowsUnchanged) noopRewriteLines else Nil) ++ rw.trailer
+      if (rw.skipEmpty && removes.isEmpty && lines.isEmpty) snap.version
+      else if (insertWave && rw.fence.isDefined)
+        fencedPublish(t, rw.fence.get, lines)
+      else commit(t, snap.version, adds = Nil, removes = removes,
+        extra = lines, reconcileDisjoint = rw.reconcile && rw.fence.isEmpty,
+        readSet = if (insertWave) Set.empty else rw.readSet,
+        forceClaim = rw.forceClaim)
+    } finally seal(t, stages ++ cdcStage: _*)
+  }
+
+  /** Publish `lines` into the next free slot unless the sink's `fence`
+    * (app, batch) already holds, re-checking the txn marker before
+    * EVERY attempt: [[commit]]'s slot walk never re-checks it, so a
+    * replayed twin that also passed the entry fence could land the
+    * same batch twice. Returns the version holding the batch. */
+  private def fencedPublish(t: Table, fence: (String, Long),
+                            lines: Seq[String]): Long = {
+    val (app, bid) = fence
+    var v = -1L
+    while (v < 0) {
+      val base = latestVersion(t)
+      if (lastBatch(t, app).exists(_ >= bid)) v = base
+      else if (tryPublish(t, base + 1, lines)) v = base + 1
+    }
+    v
+  }
+
+  /** The copy-on-write LOCATE: the `candidates` holding at least one
+    * row `matching` keeps (a DML predicate's filter, or a semi-join
+    * against a merge's source keys) — one file-count-scale distinct
+    * over input_file_name, one row per affected file collected, mapped
+    * back to the snapshot's relative live paths. */
+  private def locate(s: SparkSession, t: Table, snap: Snapshot,
+      candidates: Seq[String])(matching: DataFrame => DataFrame)
+      : Seq[String] = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    if (candidates.isEmpty) return Nil
     val byAbs = snap.liveFiles
       .map(rel => t.root.resolve(rel).normalize.toString -> rel).toMap
-    uris.map(u => java.nio.file.Paths.get(
-        new java.net.URI(u).getPath).normalize.toString)
-      .flatMap(byAbs.get).sorted
+    matching(readRels(s, t, snap, candidates)
+        .withColumn("_f", input_file_name()))
+      .select(col("_f")).distinct().collect()
+      .map(r => java.nio.file.Paths.get(
+        new java.net.URI(r.getString(0)).getPath).normalize.toString)
+      .flatMap(byAbs.get).toSeq.sorted
   }
 
   /** Row-level DELETE: remove every row matching `predicate` in one
@@ -2704,61 +2764,8 @@ object TxnLog {
     * nothing matched). */
   def delete(s: SparkSession, t: Table, predicate: Column,
              alias: Option[String] = None,
-             snap0: Option[Snapshot] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name,
-      lit, not}
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val cond = coalesce(predicate, lit(false))
-    val snap = snap0.getOrElse(snapshot(t))
-    val statsCols = liveStatsCols(snap)
-    // manifest pruning BEFORE the locating scan: a selective delete on
-    // a stats-tracked column opens only the sliver whose (min, max)
-    // intersects the predicate's ranges — at 100 TB the difference
-    // between touching a few files and scanning the table once per
-    // delete. Untranslatable predicates fall back to the full scan.
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
-    if (candidates.isEmpty) return snap.version
-    val affectedRel = relsOf(t, snap,
-      al(readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name()))
-        .filter(cond)
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
-    if (affectedRel.isEmpty) return snap.version
-    val affected = al(readRels(s, t, snap, affectedRel))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivors restage THROUGH the partition layout (stageAdds),
-      // so a delete never flattens files out of partition discipline;
-      // the change files stay flat (they are the feed, not the table).
-      // The survivor restage and the change-file write are
-      // independent sliver-scale jobs — overlapped (stagedPar, §2.6)
-      val partCols = snap.partCols
-      val staged = stagedPar(Seq(
-        () => stageAdds(s, t, affected.filter(not(cond)), stage,
-          partCols, statsCols, snap.schemaJson),
-        () => {
-          toPhysical(affected.filter(cond),
-            snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0)
-      val cdcLines = staged(1)
-      // auto-retry past file-disjoint interlopers (a blind append
-      // commutes with this delete at write-serializable isolation);
-      // the read set is every file the locating scan OPENED, so an
-      // intervening rewrite of any scanned file still refuses
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = adds ++ cdcLines, reconcileDisjoint = true,
-        readSet = candidates.toSet)
-    } finally seal(t, stage, cdcStage)
-  }
+             snap0: Option[Snapshot] = None): Long =
+    dml(s, t, predicate, alias, Map.empty, snap0, dvCaps = None)
 
   /** Row-level UPDATE: rewrite every row matching `predicate` with
     * the `set` assignments applied (unlisted columns keep their
@@ -2768,7 +2775,7 @@ object TxnLog {
     * after DELETE gets the same plan shape: stats-pruned locate
     * (manifest box BEFORE the locating scan), only files that CONTAIN
     * matching rows rewrite, survivors and new images restage THROUGH
-    * the partition layout (stageAdds — updating a partition column
+    * the partition layout ([[runRewrite]] — updating a partition column
     * moves the row to its new partition directory), and the change
     * feed carries old images as `cdc delete` change files plus the
     * new-image data files as `cdc insert` — the (delete old, insert
@@ -2785,83 +2792,8 @@ object TxnLog {
   def update(s: SparkSession, t: Table, set: Map[String, Column],
              predicate: Column, alias: Option[String] = None,
              snap0: Option[Snapshot] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name,
-      lit, not}
     require(set.nonEmpty, "update needs at least one SET assignment")
-    val cond = coalesce(predicate, lit(false))
-    val snap = snap0.getOrElse(snapshot(t))
-    // validate SET targets BEFORE the no-match early returns: a
-    // typo'd column must fail on an empty partition too, not only
-    // once rows happen to match (migration scripts dry-run empty)
-    snap.schemaJson.map(parseSchema).foreach { schema =>
-      val bad = set.keySet.diff(schema.fieldNames.toSet)
-      require(bad.isEmpty,
-        s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
-    }
-    val statsCols = liveStatsCols(snap)
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
-    if (candidates.isEmpty) return snap.version
-    // the alias (if any) sits ON TOP of each frame, so both bare and
-    // alias-qualified references resolve in cond and the SET rhs
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val affectedRel = relsOf(t, snap,
-      al(readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name()))
-        .filter(cond)
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
-    if (affectedRel.isEmpty) return snap.version
-    val affected = al(readRels(s, t, snap, affectedRel))
-    val tCols = affected.columns.toSeq
-    val badSets = set.keySet.diff(tCols.toSet)
-    require(badSets.isEmpty,
-      s"UPDATE SET targets unknown column(s): ${badSets.mkString(", ")}")
-    val newImages = affected.filter(cond).select(tCols.map { c =>
-      set.get(c).map(_.cast(affected.schema(c).dataType).as(c))
-        .getOrElse(col(c))
-    }: _*)
-    val partCols = snap.partCols
-    val survivorStage = newStage(t, t.dataDir)
-    val updatedStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // the survivor restage, the new-image restage (+ its constraint
-      // check — only NEW images can violate; survivors are rewritten
-      // byte-identical and already satisfied the declaration's
-      // validating scan) and the old-image change-file write are
-      // three independent sliver-scale jobs — overlapped (stagedPar,
-      // §2.6). A constraint refusal still throws before anything
-      // commits; concurrently staged garbage is sealed for vacuum,
-      // exactly as the sequential shape left it.
-      val staged = stagedPar(Seq(
-        () => stageAdds(s, t, affected.filter(not(cond)), survivorStage,
-          partCols, statsCols, snap.schemaJson),
-        () => {
-          val a = stageAdds(s, t, newImages, updatedStage, partCols,
-            statsCols, snap.schemaJson)
-          enforceStaged(s, t, Seq(updatedStage), snap.constraints)
-          a
-        },
-        () => {
-          toPhysical(affected.filter(cond),
-            snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString) // old images
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0) ++ staged(1)
-      val cdcLines =
-        staged(2) ++
-        stagedFiles(t, updatedStage).map(r => s"cdc\t$r\tinsert")
-      // same write-serializable reconciliation as delete: rebase past
-      // append-only interlopers, refuse when any SCANNED file moved
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = adds ++ cdcLines, reconcileDisjoint = true,
-        readSet = candidates.toSet)
-    } finally seal(t, survivorStage, updatedStage, cdcStage)
+    dml(s, t, predicate, alias, set, snap0, dvCaps = None)
   }
 
   /** Merge-on-read DELETE — the deletion-vector path: files whose
@@ -2890,9 +2822,8 @@ object TxnLog {
                maxDvRowsPerFile: Long = DefaultDvRowCap,
                snap0: Option[Snapshot] = None,
                maxDvBytesPerFile: Long = DefaultDvByteCap): Long =
-    dvRewrite(s, t, predicate, alias, maxDvRowsPerFile,
-      set = Map.empty, snap0 = snap0,
-      maxDvBytesPerFile = maxDvBytesPerFile)
+    dml(s, t, predicate, alias, Map.empty, snap0,
+      Some((maxDvRowsPerFile, maxDvBytesPerFile)))
 
   /** Merge-on-read UPDATE: the matched rows' OLD positions go dead
     * via deletion vectors (or a copy-on-write rewrite above the
@@ -2907,8 +2838,8 @@ object TxnLog {
                snap0: Option[Snapshot] = None,
                maxDvBytesPerFile: Long = DefaultDvByteCap): Long = {
     require(set.nonEmpty, "updateDv needs at least one SET assignment")
-    dvRewrite(s, t, predicate, alias, maxDvRowsPerFile, set, snap0,
-      maxDvBytesPerFile)
+    dml(s, t, predicate, alias, set, snap0,
+      Some((maxDvRowsPerFile, maxDvBytesPerFile)))
   }
 
   /** ONE locating job for DV writers: per-file dead sets come back
@@ -2976,12 +2907,20 @@ object TxnLog {
     * of either a megabyte log line or (the old fallback) a full
     * copy-on-write rewrite of the data file. Only the row cap routes
     * copy-on-write now: it bounds the READ-side anti-join work per
-    * file, which a sidecar would not. Returns (dv action lines,
-    * heavy abs-path set). */
-  private def dvLightHeavy(t: Table, runRows: Array[(String, Long, Long)],
+    * file, which a sidecar would not. `located` holds the statement's
+    * (file, row index) pairs, ascending per file within each
+    * partition; they fold to run-length dead sets in ONE job
+    * ([[runLengthDeadSets]]). Ranges per file are bounded by the ROW
+    * cap (each holds at least one row) and an over-byte-cap encoding
+    * lands as a sidecar, so the collector must not overflow-sentinel
+    * below the row cap. Returns (dv action lines, heavy abs-path set);
+    * both are empty when nothing was located. */
+  private def dvLightHeavy(t: Table,
+      located: org.apache.spark.sql.Dataset[(String, Long)],
       relOfAbs: Map[String, String], existing: Map[String, String],
       rowCap: Long, byteCap: Long): (Seq[String], Set[String]) = {
-    val byFile = runRows.groupBy(_._1)
+    val byFile = runLengthDeadSets(located, math.max(16L, rowCap), rowCap)
+      .groupBy(_._1)
     val overflow = byFile.collect {
       case (f, rs) if rs.exists(_._2 < 0L) => f }.toSet
     val stmtRanges: Map[String, Seq[(Long, Long)]] =
@@ -3031,116 +2970,93 @@ object TxnLog {
       (rowHeavy0 ++ heavyExtra ++ overflow.toSeq).toSet)
   }
 
-  private def dvRewrite(s: SparkSession, t: Table, predicate: Column,
-      alias: Option[String], maxDvRowsPerFile: Long,
-      set: Map[String, Column],
-      snap0: Option[Snapshot] = None,
-      maxDvBytesPerFile: Long = DefaultDvByteCap): Long = {
+  /** The row-level DML body behind [[delete]], [[update]],
+    * [[deleteDv]] and [[updateDv]] (`set` empty for a delete): the
+    * stats-pruned candidates are located, the matched rows' OLD images
+    * stage as the `cdc delete` change file and an update's NEW images
+    * as a constraint-checked `cdc insert` frame, all in one commit
+    * that reconciles past file-disjoint interlopers with the
+    * candidates as its read set (an intervening rewrite of any
+    * scanned file still refuses).
+    *  - Copy-on-write (`dvCaps` None): one file-count-scale distinct
+    *    over input_file_name finds the files holding matches; each
+    *    rewrites whole, survivors restaged.
+    *  - Merge-on-read (`dvCaps` = (row cap, encoded-byte cap)): one
+    *    PERSISTED locating scan reads THROUGH existing vectors (dead
+    *    rows never match again) and exposes (file, row index); the old
+    *    images and new images re-read the matched rows from cache
+    *    instead of re-running the predicate scan. Light files get a
+    *    `dv` line, heavy ones rewrite copy-on-write
+    *    ([[dvLightHeavy]]). */
+  private def dml(s: SparkSession, t: Table, predicate: Column,
+      alias: Option[String], set: Map[String, Column],
+      snap0: Option[Snapshot], dvCaps: Option[(Long, Long)]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val cond = coalesce(predicate, lit(false))
     val snap = snap0.getOrElse(snapshot(t))
-    // validate SET targets before the no-match early returns (the
-    // empty-partition dry-run contract, same as update)
-    snap.schemaJson.map(parseSchema).foreach { schema =>
-      val bad = set.keySet.diff(schema.fieldNames.toSet)
+    def requireSetIn(cols: Array[String]): Unit = {
+      val bad = set.keySet.diff(cols.toSet)
       require(bad.isEmpty,
         s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
     }
-    val statsCols = liveStatsCols(snap)
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
+    // validate SET targets BEFORE the no-match early returns: a
+    // typo'd column must fail on an empty partition too, not only
+    // once rows happen to match (migration scripts dry-run empty)
+    snap.schemaJson.foreach(js => requireSetIn(parseSchema(js).fieldNames))
+    val candidates = dmlCandidates(snap, predicate)
     if (candidates.isEmpty) return snap.version
-    val relOfAbs = candidates
-      .map(rel => encodedAbs(t, rel) -> rel).toMap
-    // the locating scan reads THROUGH existing vectors (already-dead
-    // rows never match again) and exposes (file, row index). It
-    // PERSISTS: the cdc old-image write and an update's new-image
-    // staging re-read the matched rows from cache instead of
-    // re-running the predicate scan, so one DV statement pays the
-    // locate cost once.
-    val hits = al(readRels(s, t, snap, candidates, withPos = true))
-      .filter(cond)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // ONE locating job ([[runLengthDeadSets]]): a scan partition's
-    // matched row indices arrive ascending per file, so the runs fold
-    // map-side with no extra shuffle
-    // ranges per file are bounded by the ROW cap (each range holds at
-    // least one row); the byte cap no longer routes copy-on-write —
-    // an over-cap encoding lands as a sidecar — so the collector must
-    // not overflow-sentinel below the row cap
-    val capRanges = math.max(16L, maxDvRowsPerFile)
-    val runRows: Array[(String, Long, Long)] = {
-      import s.implicits._
-      runLengthDeadSets(
-        hits.select(col("_g_fp"), col("_g_ri")).as[(String, Long)],
-        capRanges, maxDvRowsPerFile)
+    // the alias (if any) sits ON TOP of each frame, so both bare and
+    // alias-qualified references resolve in cond and the SET rhs
+    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
+    // SET expressions cast back to the column's type — parquet schema
+    // stability over arbitrary SET expressions
+    def newImages(matched: DataFrame): DataFrame =
+      matched.select(matched.columns.toSeq.map { c =>
+        set.get(c).map(_.cast(matched.schema(c).dataType).as(c))
+          .getOrElse(col(c))
+      }: _*)
+    def rewrite(removes: Seq[String], survivors: Option[DataFrame],
+                matched: DataFrame, dv: Seq[String]): Long =
+      runRewrite(s, t, Rewrite(snap, removes = removes,
+        frames = survivors.map(Frame(_)).toSeq ++
+          (if (set.isEmpty) None
+           else Some(Frame(newImages(matched), check = true,
+             cdcInsert = true))),
+        oldImages = Some(matched), dv = dv,
+        reconcile = true, readSet = candidates.toSet))
+    dvCaps match {
+      case None =>
+        val affectedRel =
+          locate(s, t, snap, candidates)(f => al(f).filter(cond))
+        if (affectedRel.isEmpty) return snap.version
+        val affected = al(readRels(s, t, snap, affectedRel))
+        requireSetIn(affected.columns)
+        rewrite(affectedRel, Some(affected.filter(not(cond))),
+          affected.filter(cond), Nil)
+      case Some((rowCap, byteCap)) =>
+        val hits = al(readRels(s, t, snap, candidates, withPos = true))
+          .filter(cond)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // a scan partition's matched row indices arrive ascending per
+          // file, so the runs fold map-side with no extra shuffle; the
+          // action SETS the complete dead set (existing vector merged in)
+          val relOfAbs =
+            candidates.map(rel => encodedAbs(t, rel) -> rel).toMap
+          val (dvLines, heavyAbs) = {
+            import s.implicits._
+            dvLightHeavy(t,
+              hits.select(col("_g_fp"), col("_g_ri")).as[(String, Long)],
+              relOfAbs, snap.dvs, rowCap, byteCap)
+          }
+          if (dvLines.isEmpty && heavyAbs.isEmpty) return snap.version
+          val heavyRels = heavyAbs.toSeq.map(relOfAbs).sorted
+          rewrite(heavyRels,
+            if (heavyRels.isEmpty) None
+            else Some(al(readRels(s, t, snap, heavyRels)).filter(not(cond))),
+            hits.drop(PosCols: _*), dvLines)
+        } finally hits.unpersist()
     }
-    if (runRows.isEmpty) return snap.version
-    // light-vs-heavy routing is the SHARED decision ([[dvLightHeavy]])
-    // — the action SETS the complete dead set (existing vector merged
-    // in), and a scattered delete whose merged encoding outgrows the
-    // byte cap rewrites its file instead of stamping a megabyte-scale
-    // `dv` line into every later checkpoint
-    val (dvLines, heavyAbs) = dvLightHeavy(t, runRows, relOfAbs,
-      snap.dvs, maxDvRowsPerFile, maxDvBytesPerFile)
-    val heavyRels = heavyAbs.toSeq.map(relOfAbs).sorted
-    val partCols = snap.partCols
-    val matched = hits.drop(PosCols: _*)
-    val survivorStage = newStage(t, t.dataDir)
-    val newImageStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val survivorAdds =
-        if (heavyRels.isEmpty) Nil
-        else stageAdds(s, t,
-          al(readRels(s, t, snap, heavyRels)).filter(not(cond)),
-          survivorStage, partCols, statsCols, snap.schemaJson)
-      val newImages: Option[DataFrame] =
-        if (set.isEmpty) None
-        else {
-          val tCols = matched.columns.toSeq
-          Some(matched.select(tCols.map { c =>
-            set.get(c).map(_.cast(matched.schema(c).dataType).as(c))
-              .getOrElse(col(c))
-          }: _*))
-        }
-      val newAdds = newImages.toSeq.flatMap(
-        stageAdds(s, t, _, newImageStage, partCols, statsCols,
-          snap.schemaJson))
-      // only the new images can violate (a pure delete stages none)
-      enforceStaged(s, t, Seq(newImageStage), snap.constraints)
-      toPhysical(matched, snap.schemaJson.map(parseSchema))
-        .write.parquet(cdcStage.toString) // old images
-      val cdcLines =
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete") ++
-        stagedFiles(t, newImageStage).map(r => s"cdc\t$r\tinsert")
-      // deletion vectors change read semantics: an older reader
-      // would serve the dead rows — bump the protocol floor in the
-      // same commit (only when a vector is actually stamped)
-      val proto =
-        if (dvLines.exists(_.split('\t')(2).startsWith("@")))
-          Seq(ProtocolV3Line) // sidecar refs demand a v3 reader
-        else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
-        else Nil
-      val extra = proto ++ survivorAdds ++ newAdds ++ dvLines ++ cdcLines
-      // both shapes reconcile past file-disjoint interlopers: the
-      // nonempty readSet keeps the dv-only commit on rewrite claim
-      // semantics (exactly base+1, then rebase-or-refuse) — a dv
-      // line changes row state without a remove line
-      if (heavyRels.nonEmpty)
-        commit(t, snap.version, adds = Nil, removes = heavyRels,
-          extra = extra, reconcileDisjoint = true,
-          readSet = candidates.toSet)
-      else
-        commit(t, snap.version, adds = Nil, removes = Nil,
-          extra = extra, reconcileDisjoint = true,
-          readSet = candidates.toSet)
-    } finally seal(t, survivorStage, newImageStage, cdcStage)
-    } finally hits.unpersist()
   }
 
   /** MERGE (upsert): for every `source` row, REPLACE the table row
@@ -3162,7 +3078,7 @@ object TxnLog {
     * of the touched sliver. Returns the committed version. */
   def merge(s: SparkSession, t: Table, source: DataFrame,
             keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    import org.apache.spark.sql.functions.{col, max, min}
     val snap = snapshot(t)
     val statsCols = liveStatsCols(snap)
     // one materialization: the upsert reads its source from several
@@ -3187,13 +3103,8 @@ object TxnLog {
           case _ => snap.liveFiles // non-long key: cannot prune
         }
       }
-    val affectedRel = if (candidates.isEmpty) Nil else relsOf(t, snap,
-      readRels(s, t, snap, candidates)
-        .withColumn("_f", input_file_name())
-        .join(keys, Seq(keyCol), "left_semi")
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
+    val affectedRel = locate(s, t, snap, candidates)(
+      _.join(keys, Seq(keyCol), "left_semi"))
     // a partitioned table's survivors AND new images restage THROUGH
     // its layout — a merge must not erode the partition metadata
     // dropPartition and pruning depend on (same rule as delete)
@@ -3204,51 +3115,25 @@ object TxnLog {
       else appendPartitioned(s, t, src, partCols,
         statsCols.filterNot(partCols.contains))
     val affected = readRels(s, t, snap, affectedRel)
-    val survivorStage = newStage(t, t.dataDir)
-    val sourceStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivor restage, source restage (+ its constraint check —
-      // only the source's new images/inserts can violate; survivors
-      // are byte-identical rewrites) and the old-image change-file
-      // write are independent sliver-scale jobs — overlapped
-      // (stagedPar, §2.6); refusals still throw before the commit
-      val staged = stagedPar(Seq(
-        () => stageAdds(s, t,
-          affected.join(keys, Seq(keyCol), "left_anti"),
-          survivorStage, partCols, statsCols, snap.schemaJson),
-        () => {
-          val a = stageAdds(s, t, src, sourceStage, partCols, statsCols,
-            snap.schemaJson)
-          enforceStaged(s, t, Seq(sourceStage), snap.constraints)
-          a
-        },
-        () => {
-          toPhysical(affected.join(keys, Seq(keyCol), "left_semi"),
-              snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString) // old images, matched rows
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0) ++ staged(1)
-      val (schema, changed, _) = mergedSchema(t, registeredSchema(t),
-        src.schema)
-      val cdcLines =
-        staged(2) ++
-        stagedFiles(t, sourceStage).map(r => s"cdc\t$r\tinsert")
-      val schemaLine = if (changed) Seq(s"schema\t${schema.json}") else Nil
-      // reconcile past append-only interlopers; the read set is the
-      // candidate files the locating join opened
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = schemaLine ++ adds ++ cdcLines,
-        reconcileDisjoint = true, readSet = candidates.toSet)
-    } finally seal(t, survivorStage, sourceStage, cdcStage)
+    // only the source's new images/inserts can violate a constraint;
+    // survivors are byte-identical rewrites
+    runRewrite(s, t, Rewrite(snap, removes = affectedRel,
+      frames = Seq(Frame(affected.join(keys, Seq(keyCol), "left_anti")),
+        Frame(src, check = true, cdcInsert = true)),
+      oldImages = Some(affected.join(keys, Seq(keyCol), "left_semi")),
+      header = () => schemaHeader(mergedSchema(t, registeredSchema(t),
+        src.schema)),
+      reconcile = true, readSet = candidates.toSet))
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
 
   /** One WHEN clause of [[mergeInto]]. Conditions and SET expressions
     * reference the target as `t.<col>` and the source as `s.<col>`
     * (the aliases are overridable for the SQL front end). */
-  sealed trait MergeClause
+  sealed trait MergeClause {
+    /** The clause's extra condition (`WHEN ... AND cond`), if any. */
+    def cond: Option[Column]
+  }
   object MergeClause {
     /** WHEN MATCHED [AND cond] THEN UPDATE SET col = expr, ... —
       * column-level: unlisted target columns keep their values. */
@@ -3330,8 +3215,7 @@ object TxnLog {
       snap0: Option[Snapshot] = None,
       dvCaps: Option[(Long, Long)] = None,
       evolveSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name,
-      lit, max, min, when}
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
     require(keyCols.nonEmpty, "mergeIntoKeys needs at least one key column")
     require(clauses.nonEmpty, "mergeInto needs at least one WHEN clause")
     val matched = clauses.collect {
@@ -3370,16 +3254,14 @@ object TxnLog {
     val trackedKeys = keyCols.filter(k =>
       snap.fileStats.values.exists(_.contains(k)))
     // loud ambiguity refusal + per-tracked-key source range in ONE
-    // source-scale job (r22, guide §1.5 — fewer actions): the worst
-    // per-key multiplicity and every tracked key's min/max ride the
-    // same grouped pass; the old shape paid a second aggregate over
-    // the distinct keys just for the range. Rows with a NULL key
-    // component are EXCLUDED from the multiplicity — they can never
-    // match a target row (SQL equi-join; they only route through NOT
-    // MATCHED) — which the when() guard reproduces; min/max skip null
-    // groups by definition, and min/max over the grouped keys equal
-    // min/max over the raw rows, so both results are byte-identical
-    // to the two-job shape.
+    // source-scale job: the worst per-key multiplicity and every
+    // tracked key's min/max ride the same grouped pass, where a
+    // separate range aggregate would cost a second job. Rows with a
+    // NULL key component are EXCLUDED from the multiplicity — they can
+    // never match a target row (SQL equi-join; they only route through
+    // NOT MATCHED) — which the when() guard reproduces; min/max skip
+    // null groups by definition, and min/max over the grouped keys
+    // equal min/max over the raw rows.
     val fusedAggs =
       max(when(keyCols.map(col(_).isNotNull).reduce(_ && _), col("_n")))
         .as("_worst") +:
@@ -3421,18 +3303,11 @@ object TxnLog {
             case _                    => None
           }
         }
-        if (preds.isEmpty) snap.liveFiles else pruneBox(snap, preds)
+        pruneBox(snap, preds)
       }
     val affectedRel =
       if (bySource.nonEmpty) snap.liveFiles
-      else if (candidates.isEmpty) Nil
-      else relsOf(t, snap,
-        readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name())
-          .join(keys, keyCols, "left_semi")
-          .select(col("_f")).distinct()
-          .collect() // file-count scale: one row per affected file
-          .map(_.getString(0)).toSeq)
+      else locate(s, t, snap, candidates)(_.join(keys, keyCols, "left_semi"))
 
     // the column-list insert aligns against the REGISTERED schema —
     // a raw-commit table has nothing to align to (and no NULL-fill
@@ -3454,11 +3329,7 @@ object TxnLog {
           s"${targetFields.map(_.name).mkString(", ")})")
     }
 
-    def insertCond(cl: MergeClause): Column = (cl match {
-      case x: MergeClause.Insert     => x.cond
-      case x: MergeClause.InsertExpr => x.cond
-      case _                         => None
-    }).getOrElse(lit(true))
+    def condOf(cl: MergeClause): Column = cl.cond.getOrElse(lit(true))
 
     def insertable(unmatched: DataFrame): Option[DataFrame] =
       if (insertsAll.isEmpty) None
@@ -3468,7 +3339,7 @@ object TxnLog {
         // schema-evolution contract — source-only columns extend the
         // table)
         Some(unmatched.filter(
-          insertsAll.map(insertCond).reduce(_ || _)))
+          insertsAll.map(condOf).reduce(_ || _)))
       else {
         // mixed/column-list path: route each unmatched row to its
         // FIRST accepting clause and project that clause's values
@@ -3478,7 +3349,7 @@ object TxnLog {
         val srcCols = src.columns.toSet
         val ichain = insertsAll.zipWithIndex
           .foldRight(lit(0): Column) { case ((cl, i), acc) =>
-            when(insertCond(cl), lit(i + 1)).otherwise(acc)
+            when(condOf(cl), lit(i + 1)).otherwise(acc)
           }
         val routed = unmatched.withColumn("_graft_ic", ichain)
           .filter(col("_graft_ic") =!= 0)
@@ -3523,14 +3394,7 @@ object TxnLog {
             allowWiden = evolveSchema)
           latestVersion(t)
         case (None, Some((app, bid))) =>
-          var v = -1L
-          while (v < 0) {
-            val base = latestVersion(t)
-            if (lastBatch(t, app).exists(_ >= bid)) v = base
-            else if (tryPublish(t, base + 1, Seq(s"txn\t$app\t$bid")))
-              v = base + 1
-          }
-          v
+          fencedPublish(t, (app, bid), Seq(s"txn\t$app\t$bid"))
         case (Some(rows), None) if partCols.nonEmpty =>
           appendPartitioned(s, t, rows, partCols,
             statsCols.filterNot(partCols.contains), extraLines,
@@ -3564,10 +3428,14 @@ object TxnLog {
         }
     }
     val tCols = affected.columns.toSeq.filterNot(PosCols.contains)
-    val badSets = (matched.collect { case u: MergeClause.Update =>
-      u.set.keySet.diff(tCols.toSet) } ++
-      bySource.collect { case u: MergeClause.BySourceUpdate =>
-        u.set.keySet.diff(tCols.toSet) }).flatten
+    // the UPDATE clauses' SET maps, keyed by their first-match clause
+    // index (see chain below)
+    val updates: Seq[(Int, Map[String, Column])] =
+      matched.zipWithIndex.collect {
+        case (u: MergeClause.Update, i) => (i + 1, u.set) } ++
+      bySource.zipWithIndex.collect {
+        case (u: MergeClause.BySourceUpdate, i) => (-(i + 1), u.set) }
+    val badSets = updates.flatMap(_._2.keySet.diff(tCols.toSet))
     require(badSets.isEmpty,
       s"UPDATE SET targets unknown column(s): ${badSets.mkString(", ")}")
 
@@ -3580,22 +3448,14 @@ object TxnLog {
     // applies, 0 no clause fires (row untouched, absent from CDF)
     def chain(cls: Seq[MergeClause], sign: Int): Column =
       cls.zipWithIndex.foldRight(lit(0): Column) { case ((cl, i), acc) =>
-        val cond = (cl match {
-          case u: MergeClause.Update         => u.cond
-          case d: MergeClause.Delete         => d.cond
-          case u: MergeClause.BySourceUpdate => u.cond
-          case d: MergeClause.BySourceDelete => d.cond
-          case _: MergeClause.Insert     => None // never listed here
-          case _: MergeClause.InsertExpr => None // never listed here
-        }).getOrElse(lit(true))
-        when(cond, lit(sign * (i + 1))).otherwise(acc)
+        when(condOf(cl), lit(sign * (i + 1))).otherwise(acc)
       }
     val idx = when(col(s"$sa._graft_m").isNull, chain(bySource, -1))
       .otherwise(chain(matched, 1))
     // merge-on-read evaluates the clause join one extra time (the
     // locate collect) on top of the survivor/old-image/new-image
     // stages — persist it so the touched-sliver scan and join run
-    // once per statement, the same reasoning as dvRewrite's hits
+    // once per statement, the same reasoning as [[dml]]'s hits
     // cache (released in the finally)
     val withIdx0 = joined.withColumn("_clause", idx)
     val withIdx =
@@ -3603,10 +3463,6 @@ object TxnLog {
       else withIdx0.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val updateIdx = matched.zipWithIndex.collect {
-      case (_: MergeClause.Update, i) => i + 1 } ++
-      bySource.zipWithIndex.collect {
-        case (_: MergeClause.BySourceUpdate, i) => -(i + 1) }
     val tSel = tCols.map(c => col(s"$ta.$c").as(c))
     // MERGE-ON-READ routing (dvCaps set — the graft.enableDeletionVectors
     // SQL switch): every touched row's OLD position goes dead via a
@@ -3630,13 +3486,10 @@ object TxnLog {
           .as[(String, Long)](org.apache.spark.sql.Encoders.tuple(
             org.apache.spark.sql.Encoders.STRING,
             org.apache.spark.sql.Encoders.scalaLong))
-        val capRanges = math.max(16L, rowCap) // see dvRewrite: the
-        // row cap alone bounds ranges; over-cap encodings ride sidecars
-        val runRows = runLengthDeadSets(touchedPos, capRanges, rowCap)
         // light-vs-heavy routing is the SHARED decision with
         // deleteDv/updateDv ([[dvLightHeavy]]) — same caps, same
         // merged-encoding semantics, by construction
-        val (dvLines, heavyAbs) = dvLightHeavy(t, runRows, relOfAbs,
+        val (dvLines, heavyAbs) = dvLightHeavy(t, touchedPos, relOfAbs,
           snap.dvs, rowCap, byteCap)
         (dvLines, heavyAbs, heavyAbs.toSeq.map(relOfAbs).sorted)
       }
@@ -3659,22 +3512,13 @@ object TxnLog {
     // overridden (cast back to the column's type — parquet schema
     // stability over arbitrary SET expressions)
     val updatedNew =
-      if (updateIdx.isEmpty) None
-      else Some(withIdx.filter(col("_clause").isInCollection(updateIdx))
+      if (updates.isEmpty) None
+      else Some(withIdx
+        .filter(col("_clause").isInCollection(updates.map(_._1)))
         .select(tCols.map { c =>
-          val viaMatched = matched.zipWithIndex
-            .foldRight(col(s"$ta.$c")) {
-              case ((u: MergeClause.Update, i), acc) if u.set.contains(c) =>
-                when(col("_clause") === (i + 1),
-                  u.set(c).cast(affected.schema(c).dataType)).otherwise(acc)
-              case (_, acc) => acc
-            }
-          bySource.zipWithIndex.foldRight(viaMatched) {
-            case ((u: MergeClause.BySourceUpdate, i), acc)
-              if u.set.contains(c) =>
-              when(col("_clause") === -(i + 1),
-                u.set(c).cast(affected.schema(c).dataType)).otherwise(acc)
-            case (_, acc) => acc
+          updates.foldRight(col(s"$ta.$c")) { case ((k, set), acc) =>
+            set.get(c).fold(acc)(e => when(col("_clause") === k,
+              e.cast(affected.schema(c).dataType)).otherwise(acc))
           }.as(c)
         }: _*))
     val affKeys = affected.select(
@@ -3683,113 +3527,29 @@ object TxnLog {
       .join(affKeys, keyCols.map(k =>
         col(s"$sa.$k") === col(s"_tk_$k")).reduce(_ && _), "left_anti"))
 
-    val survivorStage = newStage(t, t.dataDir)
-    val updatedStage = newStage(t, t.dataDir)
-    val insertStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivor / updated-new-image / insert restages and the
-      // old-image change-file write are independent sliver-scale jobs
-      // — overlapped (stagedPar, §2.6); the constraint check (updated
-      // new images + accepted inserts can violate; survivors are
-      // byte-identical rewrites) still throws before the commit
-      val stagedOut = stagedPar(Seq(
-        () => survivors.toSeq.flatMap(
-          stageAdds(s, t, _, survivorStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => updatedNew.toSeq.flatMap(
-          stageAdds(s, t, _, updatedStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => inserted.toSeq.flatMap(
-          stageAdds(s, t, _, insertStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => {
-          toPhysical(oldImages, snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          Seq.empty[String]
-        }))
-      val adds = stagedOut(0) ++ stagedOut(1) ++ stagedOut(2)
-      enforceStaged(s, t, Seq(updatedStage, insertStage),
-        snap.constraints)
-      val (schema, changed, widenedAny) = evolvedTo match {
+    // updated new images + accepted inserts can violate a constraint;
+    // survivors are byte-identical rewrites
+    runRewrite(s, t, Rewrite(snap,
+      removes = dvInfo.fold(affectedRel)(_._3),
+      frames = survivors.map(Frame(_)).toSeq ++
+        (updatedNew ++ inserted).map(Frame(_, check = true,
+          cdcInsert = true)),
+      oldImages = Some(oldImages),
+      dv = dvInfo.fold(Seq.empty[String])(_._1),
+      header = () => schemaHeader(evolvedTo match {
         // WITH SCHEMA EVOLUTION: the pre-computed merged shape lands
         // with the data in this one commit, insert path or not
         case Some((m, w)) => (m, true, w)
-        case None => inserted match {
-          // only the whole-row insert path evolves the schema; the
-          // column-list projection already IS the registered shape
-          case Some(_) if !hasInsertExpr =>
-            mergedSchema(t, registeredSchema(t), src.schema)
-          case _ => (affected.schema, false, false)
-        }
-      }
-      val cdcLines =
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete") ++
-        (stagedFiles(t, updatedStage) ++ stagedFiles(t, insertStage))
-          .map(r => s"cdc\t$r\tinsert")
-      val schemaLine =
-        (if (widenedAny) Seq(ProtocolV2Line) else Nil) ++
-        (if (changed) Seq(s"schema\t${schema.json}") else Nil)
-      // reconciliation is UNFENCED-only: commit()'s rebase-retry
-      // never re-checks a txn marker, and a fenced merge (the
-      // streaming upsert sink) retries through upsertBatch's outer
-      // loop, which re-checks the fence before every recompute — a
-      // replayed twin's batch must be detected, not re-applied
-      val reconcile = fence.isEmpty
-      val mergeReadSet =
-        (if (bySource.nonEmpty) snap.liveFiles else candidates).toSet
-      dvInfo match {
-        case None => // copy-on-write: every affected file rewrites
-          commit(t, snap.version, adds = Nil, removes = affectedRel,
-            extra = schemaLine ++ adds ++ cdcLines ++ extraLines,
-            reconcileDisjoint = reconcile, readSet = mergeReadSet)
-        case Some((dvLines, _, heavyRels)) =>
-          val proto =
-            if (dvLines.exists(_.split('\t')(2).startsWith("@")))
-              Seq(ProtocolV3Line) // sidecar refs demand a v3 reader
-            else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
-            else Nil
-          // a NO-dv, NO-remove outcome (no clause fired on any row;
-          // only inserts landed) is a plain insert wave: its adds
-          // auto-count in the change feed, so cdc refs would deliver
-          // every inserted row twice
-          val cdcAll =
-            if (dvLines.nonEmpty || heavyRels.nonEmpty) cdcLines else Nil
-          val extraAll = proto ++ schemaLine ++ adds ++ dvLines ++
-            cdcAll ++ extraLines
-          if (heavyRels.nonEmpty)
-            // the remove-bearing commit claims base+1, then
-            // reconciles (unfenced) or refuses (fenced) on conflict
-            commit(t, snap.version, adds = Nil, removes = heavyRels,
-              extra = extraAll, reconcileDisjoint = reconcile,
-              readSet = mergeReadSet)
-          else if (dvLines.nonEmpty) {
-            // nonempty readSet keeps rewrite claim semantics on the
-            // dv-only commit even with no removes
-            commit(t, snap.version, adds = Nil, removes = Nil,
-              extra = extraAll, reconcileDisjoint = reconcile,
-              readSet = mergeReadSet)
-          } else if (extraAll.isEmpty) snap.version
-          else fence match {
-            // a NO-dv NO-remove outcome under a FENCE must not
-            // blind-append: commit()'s slot walk never re-checks the
-            // txn marker, so a replayed twin that also passed the
-            // entry fence could land the same insert wave twice —
-            // the same reason the degraded path routes through
-            // appendBatch's fence-rechecking loop
-            case Some((app, bid)) =>
-              var v = -1L
-              while (v < 0) {
-                val base = latestVersion(t)
-                if (lastBatch(t, app).exists(_ >= bid)) v = base
-                else if (tryPublish(t, base + 1, extraAll)) v = base + 1
-              }
-              v
-            case None =>
-              commit(t, snap.version, adds = Nil, extra = extraAll)
-          }
-      }
-    } finally seal(t, survivorStage, updatedStage, insertStage, cdcStage)
+        // only the whole-row insert path evolves the schema; the
+        // column-list projection already IS the registered shape
+        case None if inserted.isDefined && !hasInsertExpr =>
+          mergedSchema(t, registeredSchema(t), src.schema)
+        case None => (affected.schema, false, false)
+      }),
+      trailer = extraLines, skipEmpty = true,
+      reconcile = true,
+      readSet = (if (bySource.nonEmpty) snap.liveFiles else candidates).toSet,
+      fence = fence))
     } finally { if (dvCaps.nonEmpty) withIdx.unpersist(); () }
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
@@ -4622,51 +4382,40 @@ object TxnLog {
     * (schema-divergent writer whose rows would null-fill on read)
     * refuses too. */
   private def enforceStaged(s: SparkSession, t: Table,
-                            stages: Seq[Path], c: Constraints): Unit = {
+                            stage: Path, c: Constraints): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not,
       sum, when}
-    if (c.isEmpty) return
-    // one read per stage root (partition discovery reconstitutes each
-    // stage's own <col>=<val> layout — including the null sentinel —
-    // and two roots with different layouts cannot share one scan)
+    if (c.isEmpty || stagedFiles(t, stage).isEmpty) return
+    // partition discovery reconstitutes the stage's own <col>=<val>
+    // layout (the null sentinel included); staged files hold PHYSICAL
+    // names and constraints reference logical ones — alias back
     val reg = registeredSchema(t)
-    for (stg <- stages if stagedFiles(t, stg).nonEmpty) {
-      // staged files hold PHYSICAL names; constraints reference
-      // logical ones — alias back before checking
-      val raw = s.read.parquet(stg.toString)
-      val df = reg match {
-        case Some(sc) if sc.fields.exists(f => physicalName(f) != f.name) =>
-          val logOf = sc.fields.map(f => physicalName(f) -> f.name).toMap
-          raw.select(raw.columns.toIndexedSeq.map(cn =>
-            col(cn).as(logOf.getOrElse(cn, cn))): _*)
-        case _ => raw
-      }
-      val have = df.columns.toSet
-      // an omitted column with a NON-NULL default satisfies NOT NULL
-      // (reads serve the default); a DEFAULT NULL column does not —
-      // the backfill would be the very NULL the constraint forbids
-      c.notNull.foreach(cn => require(have.contains(cn) ||
-        reg.flatMap(_.fields.find(_.name == cn))
-          .flatMap(defaultSql).exists(!_.equalsIgnoreCase("NULL")),
-        s"constraint violation: NOT NULL $cn — this write omits the " +
-          "column entirely (it would null-fill on read); nothing was " +
-          "committed"))
-      val viols: Seq[(String, org.apache.spark.sql.Column)] =
-        c.notNull.toSeq.sorted.map(cn =>
-          s"NOT NULL $cn" -> col(cn).isNull) ++
-        c.checks.toSeq.sortBy(_._1).map { case (n, sql) =>
-          // SQL CHECK semantics: TRUE or UNKNOWN satisfies — only a
-          // provably FALSE row violates (a NULL-filled column passes)
-          s"CHECK $n ($sql)" -> not(coalesce(expr(sql), lit(true))) }
-      val aggs = viols.zipWithIndex.map { case ((_, v), i) =>
-        sum(when(v, 1L).otherwise(0L)).as(s"_c$i") }
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      viols.zipWithIndex.foreach { case ((label, _), i) =>
-        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-        require(n == 0L,
-          s"constraint violation: $label — $n row(s) in this write " +
-            "violate it; nothing was committed")
-      }
+    val df = toLogicalNames(s.read.parquet(stage.toString), reg)
+    val have = df.columns.toSet
+    // an omitted column with a NON-NULL default satisfies NOT NULL
+    // (reads serve the default); a DEFAULT NULL column does not —
+    // the backfill would be the very NULL the constraint forbids
+    c.notNull.foreach(cn => require(have.contains(cn) ||
+      reg.flatMap(_.fields.find(_.name == cn))
+        .flatMap(defaultSql).exists(!_.equalsIgnoreCase("NULL")),
+      s"constraint violation: NOT NULL $cn — this write omits the " +
+        "column entirely (it would null-fill on read); nothing was " +
+        "committed"))
+    val viols: Seq[(String, org.apache.spark.sql.Column)] =
+      c.notNull.toSeq.sorted.map(cn =>
+        s"NOT NULL $cn" -> col(cn).isNull) ++
+      c.checks.toSeq.sortBy(_._1).map { case (n, sql) =>
+        // SQL CHECK semantics: TRUE or UNKNOWN satisfies — only a
+        // provably FALSE row violates (a NULL-filled column passes)
+        s"CHECK $n ($sql)" -> not(coalesce(expr(sql), lit(true))) }
+    val aggs = viols.zipWithIndex.map { case ((_, v), i) =>
+      sum(when(v, 1L).otherwise(0L)).as(s"_c$i") }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    viols.zipWithIndex.foreach { case ((label, _), i) =>
+      val n = if (row.isNullAt(i)) 0L else row.getLong(i)
+      require(n == 0L,
+        s"constraint violation: $label — $n row(s) in this write " +
+          "violate it; nothing was committed")
     }
   }
 

@@ -26,6 +26,11 @@ object Shim {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** Block until every listener event posted so far has been
+    * delivered (LiveListenerBus is private[spark]). */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Release the block-manager storage behind a `localCheckpoint()`ed
     * DataFrame (its plan is a LogicalRDD over the checkpointed RDD).
     * Dataset.unpersist only consults the CacheManager, which never

@@ -4325,4 +4325,219 @@ class TxnLogSpec extends AnyFunSuite {
     assert(n === 2, s"light dv DELETE ran $n jobs (want locate + cdc write)")
     assert(TxnLog.read(spark, t3).count() === 99L)
   }
+
+  /** Action counts of version `v`'s log file, keyed by verb (`cdc`
+    * split into `cdc insert` / `cdc delete` / `cdc none`); zero counts
+    * are left out. */
+  private def actionCounts(t: TxnLog.Table, v: Long): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(t.logDir.resolve(f"$v%020d.log")).asScala.toSeq
+      .filter(_.nonEmpty)
+      .map { l =>
+        val f = l.split('\t')
+        if (f(0) == "cdc") s"cdc ${if (f.length == 2) f(1) else f(2)}"
+        else f(0)
+      }
+      .groupBy(identity).map { case (k, xs) => k -> xs.length }
+  }
+
+  test("txnlog: commit shape — every rewrite entry point emits its pinned action counts") {
+    import spark.implicits._
+    import TxnLog.MergeClause
+    // a partitioned (p = a/b), stats-tracked (id, v) table: two waves
+    // of one file per partition, then a one-row deletion vector on the
+    // wave-0 p=b file (ids 1/3/5) — version 2
+    def fixture(): TxnLog.Table = {
+      val t = freshTable()
+      for (w <- 0 until 2)
+        TxnLog.appendPartitioned(spark, t,
+          (w * 6 until (w + 1) * 6).map(i =>
+            (i.toLong, i.toLong * 10, if (i % 2 == 0) "a" else "b"))
+            .toDF("id", "v", "p").coalesce(1), Seq("p"), Seq("id", "v"))
+      TxnLog.deleteDv(spark, t, col("id") === 1L)
+      t
+    }
+    def rows(ids: Long*) =
+      ids.map(i => (i, i * 100, if (i % 2 == 0) "a" else "b"))
+        .toDF("id", "v", "p").coalesce(1)
+    val upsert = Seq(MergeClause.Update(None, Map("v" -> col("s.v"))),
+      MergeClause.Insert(None))
+    // (entry point, op, pinned counts of the version it commits)
+    val cases: Seq[(String, TxnLog.Table => Long, Map[String, Int])] = Seq(
+      ("compact", TxnLog.compact(spark, _),
+        Map("add" -> 2, "remove" -> 4, "cdc none" -> 1, "rowstate" -> 1)),
+      ("compactSmall", TxnLog.compactSmall(spark, _, Long.MaxValue),
+        Map("add" -> 2, "remove" -> 4, "cdc none" -> 1, "rowstate" -> 1)),
+      ("compactPartition", TxnLog.compactPartition(spark, _, Map("p" -> "b")),
+        Map("add" -> 1, "remove" -> 2, "cdc none" -> 1, "rowstate" -> 1)),
+      ("compactZorder", TxnLog.compactZorder(spark, _, "id", "v", 2),
+        Map("add" -> 4, "remove" -> 4, "cdc none" -> 1, "rowstate" -> 1)),
+      ("replace", TxnLog.replace(spark, _, rows(20, 21)),
+        Map("add" -> 1, "remove" -> 4, "cdc insert" -> 1,
+          "cdc delete" -> 4)),
+      ("replaceWhere",
+        TxnLog.replaceWhere(spark, _, rows(21, 23), Map("p" -> "b")),
+        Map("add" -> 1, "remove" -> 2, "cdc insert" -> 1,
+          "cdc delete" -> 2)),
+      ("replaceDynamic", TxnLog.replaceDynamic(spark, _, rows(21)),
+        Map("add" -> 1, "remove" -> 2, "cdc insert" -> 1,
+          "cdc delete" -> 2)),
+      ("replaceWhereExpr",
+        TxnLog.replaceWhereExpr(spark, _, rows(20, 21), col("id") >= 9L),
+        Map("add" -> 4, "remove" -> 2, "cdc insert" -> 2,
+          "cdc delete" -> 2)),
+      ("replaceDefinition", t => TxnLog.replaceDefinition(spark, t,
+        rows(20).schema, Seq("p"), Map("k" -> "x"), Some(rows(20, 21))),
+        Map("add" -> 2, "remove" -> 4, "cdc insert" -> 2, "cdc delete" -> 4,
+          "schema" -> 1, "partcols" -> 1, "property" -> 1,
+          "cleardropped" -> 1)),
+      ("delete", TxnLog.delete(spark, _, col("id") === 3L),
+        Map("add" -> 1, "remove" -> 1, "cdc delete" -> 1)),
+      ("update",
+        TxnLog.update(spark, _, Map("v" -> lit(-1L)), col("id") === 4L),
+        Map("add" -> 2, "remove" -> 1, "cdc insert" -> 1,
+          "cdc delete" -> 1)),
+      ("deleteDv", TxnLog.deleteDv(spark, _, col("id") === 4L),
+        Map("dv" -> 1, "cdc delete" -> 1, "protocol" -> 1)),
+      ("updateDv",
+        TxnLog.updateDv(spark, _, Map("v" -> lit(-1L)), col("id") === 3L),
+        Map("add" -> 1, "dv" -> 1, "cdc insert" -> 1, "cdc delete" -> 2,
+          "protocol" -> 1)),
+      ("merge", TxnLog.merge(spark, _, rows(2, 30), "id"),
+        Map("add" -> 2, "remove" -> 1, "cdc insert" -> 1,
+          "cdc delete" -> 1)),
+      ("mergeInto", TxnLog.mergeInto(spark, _, rows(2, 30), "id", upsert),
+        Map("add" -> 3, "remove" -> 1, "cdc insert" -> 2,
+          "cdc delete" -> 1)),
+      ("mergeIntoKeys dv+fence", TxnLog.mergeIntoKeys(spark, _, rows(3, 31),
+        Seq("id"), upsert, extraLines = Seq("txn\tapp\t7"),
+        fence = Some(("app", 7L)), dvCaps = Some((100000L, 65536L))),
+        Map("add" -> 2, "dv" -> 1, "cdc insert" -> 2, "cdc delete" -> 1,
+          "protocol" -> 1, "txn" -> 1)))
+    val got = cases.map { case (name, op, _) =>
+      val t = fixture()
+      val v = op(t)
+      assert(v === 3L, s"$name committed v$v")
+      name -> actionCounts(t, v)
+    }
+    val bad = cases.zip(got).collect {
+      case ((name, _, want), (_, have)) if have != want =>
+        s"$name: want $want, got $have"
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("txnlog: rewrite edge decisions — empty overwrites and refusal order") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.IntegerType
+    def partitioned(): TxnLog.Table = {
+      val t = freshTable()
+      TxnLog.appendPartitioned(spark, t,
+        Seq((1L, 10L, "a"), (2L, 20L, "a")).toDF("id", "v", "p")
+          .coalesce(1), Seq("p"), Seq("id"))
+      t
+    }
+    val none = Seq.empty[(Long, Long, String)].toDF("id", "v", "p")
+    val noneEvolved = Seq.empty[(Long, Long, String, String)]
+      .toDF("id", "v", "p", "extra")
+    // a whole-table overwrite of an emptied table by nothing still
+    // publishes its version
+    val t1 = freshTable()
+    TxnLog.append(spark, t1, Seq(1L).toDF("id"))
+    val emptied = TxnLog.delete(spark, t1, lit(true))
+    assert(TxnLog.replace(spark, t1, Seq.empty[Long].toDF("id")) ===
+      emptied + 1)
+    // so does a partition overwrite of an empty partition by nothing
+    val t2 = partitioned()
+    assert(TxnLog.replaceWhere(spark, t2, none, Map("p" -> "b")) === 1L)
+    // an empty dynamic or predicate overwrite commits nothing, even
+    // when its shape would evolve the schema
+    val t3 = partitioned()
+    assert(TxnLog.replaceDynamic(spark, t3, noneEvolved) === 0L)
+    assert(TxnLog.replaceWhereExpr(spark, t3, noneEvolved,
+      col("id") >= 100L) === 0L)
+    assert(TxnLog.latestVersion(t3) === 0L)
+    assert(!TxnLog.registeredSchema(t3).get.fieldNames.contains("extra"))
+    // a stray row refuses before the constraint check sees it
+    val t4 = partitioned()
+    TxnLog.addCheck(spark, t4, "pos", "v >= 0")
+    val bad = Seq((5L, -1L, "a")).toDF("id", "v", "p")
+    val stray = intercept[IllegalArgumentException] {
+      TxnLog.replaceWhere(spark, t4, bad, Map("p" -> "b"))
+    }
+    assert(stray.getMessage.contains("outside the scoped"), stray.getMessage)
+    val strayExpr = intercept[IllegalArgumentException] {
+      TxnLog.replaceWhereExpr(spark, t4, bad, col("id") >= 100L)
+    }
+    assert(strayExpr.getMessage.contains("outside the predicate"),
+      strayExpr.getMessage)
+    // a constraint violation refuses before a widening does
+    val t5 = freshTable()
+    TxnLog.append(spark, t5, Seq((1L, 1)).toDF("id", "k")
+      .select(col("id"), col("k").cast(IntegerType)).coalesce(1))
+    TxnLog.addCheck(spark, t5, "pos", "k >= 0")
+    val wideBad = Seq((1L, -1L)).toDF("id", "k")
+    for ((name, op) <- Seq[(String, () => Long)](
+        "merge" -> (() => TxnLog.merge(spark, t5, wideBad, "id")),
+        "mergeInto" -> (() => TxnLog.mergeInto(spark, t5, wideBad, "id",
+          Seq(TxnLog.MergeClause.Update(None, Map("k" -> col("s.k"))),
+            TxnLog.MergeClause.Insert(None)))))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("constraint violation"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("txnlog: a failing staging thunk waits for its sibling writes to end before rethrowing") {
+    // the caller seals its stages as soon as stagedPar returns or
+    // throws, so no sibling write may still be landing files: the
+    // sibling is a real parquet write (slowed per row), the failing
+    // thunk throws once that write's job is under way, and nothing
+    // under the sibling's stage may change after the throw
+    val stage = Files.createTempDirectory("graft-stage-").resolve("s")
+    val slow = udf { (i: Long) => Thread.sleep(30); i }
+    def listing(): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      if (!Files.exists(stage)) Map.empty
+      else {
+        val w = Files.walk(stage)
+        try w.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(p => stage.relativize(p).toString -> Files.size(p)).toMap
+        catch { case _: java.io.IOException |
+                     _: java.io.UncheckedIOException =>
+          Map("<moving>" -> -1L) }
+        finally w.close()
+      }
+    }
+    val boom = intercept[IllegalStateException] {
+      TxnLog.stagedPar(Seq[() => Unit](
+        () => {
+          val until = System.nanoTime() + 20000000000L
+          while (!Files.exists(stage.resolve("_temporary")) &&
+              System.nanoTime() < until) Thread.sleep(5)
+          throw new IllegalStateException("refused")
+        },
+        () => spark.range(0, 60, 1, 2).select(slow(col("id")).as("id"))
+          .write.parquet(stage.toString)))
+    }
+    assert(boom.getMessage === "refused")
+    val atThrow = listing()
+    Thread.sleep(1500)
+    assert(listing() === atThrow,
+      "files under a sibling's stage changed after stagedPar threw")
+    assert(Files.exists(stage.resolve("_SUCCESS")),
+      "the sibling write did not run to its end")
+  }
+
+  test("txnlog: appendSlices refuses slices whose schemas differ") {
+    import spark.implicits._
+    val t = freshTable()
+    val boom = intercept[IllegalArgumentException] {
+      TxnLog.appendSlices(spark, t, Seq(
+        Seq(1L).toDF("id"),
+        Seq((2L, "x")).toDF("id", "tag")))
+    }
+    assert(boom.getMessage.contains("identical schemas"), boom.getMessage)
+    assert(TxnLog.latestVersion(t) === -1L)
+  }
 }
